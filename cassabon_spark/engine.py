@@ -35,7 +35,12 @@ from pyspark.errors.exceptions.captured import AnalysisException
 
 from cassabon_spark.config import RollupConfig
 from cassabon_spark.operators import query as qmod
-from cassabon_spark.operators.index import glob_depth, glob_to_regex, search_glob
+from cassabon_spark.operators.index import (
+    glob_depth,
+    glob_to_regex,
+    search_glob,
+    update_indexes,
+)
 from cassabon_spark.operators.rollup import (
     rollup_all_tiers,
     route,
@@ -202,7 +207,7 @@ class Engine:
             self.table.append(bucketed, partition_cols=("resolution_s", "date_bucket"))
         else:
             write_rollups(tiers, self.store_dir)
-        self._update_index(metrics)
+        update_indexes(self.spark, metrics, self.index_dir, self.tag_index_dir)
         return {"received": n_ok, "rejected": obs.get["malformed"]}
 
     def start_streaming_ingest(self, lines_dir: str, checkpoint_dir: str, **kw):
@@ -216,22 +221,6 @@ class Engine:
         return ingest_stream(
             self.spark, self.config, lines_dir, self.store_dir, checkpoint_dir, **kw
         )
-
-    def _update_index(self, metrics: DataFrame) -> None:
-        """Incremental A18: expand ancestors of NEW paths only (anti-join
-        against the existing index) and append. Tagged series (`;tag=v`)
-        go to the tag index instead of the dot tree."""
-        from cassabon_spark.operators.index import update_index_incremental
-        from cassabon_spark.operators.tags import (
-            is_tagged_expr,
-            update_tag_index_incremental,
-        )
-
-        untagged = metrics.filter(~is_tagged_expr("path"))
-        update_index_incremental(self.spark, untagged, self.index_dir)
-        tagged = metrics.filter(is_tagged_expr("path"))
-        if not tagged.isEmpty():
-            update_tag_index_incremental(self.spark, tagged, self.tag_index_dir)
 
     def _has_tag_index(self) -> bool:
         p = Path(self.tag_index_dir)
@@ -696,14 +685,19 @@ class Engine:
                 resolution_s=tier.window_s,
             )
 
+        leaves: dict[str, list[str]] = {}
+
+        def leaf_paths(glob: str) -> list[str]:
+            # one index lookup per glob per request: the step seed below and
+            # every fetch of the glob (timeShift etc. refetch it) share it
+            if glob not in leaves:
+                leaves[glob] = [p["path"] for p in self.get_paths(glob) if p["leaf"]]
+            return leaves[glob]
+
         def grid_for_glob(
             glob: str, offset_s: int = 0, consolidate: str | None = None
         ):
-            return grid_for_series(
-                [p["path"] for p in self.get_paths(glob) if p["leaf"]],
-                offset_s,
-                consolidate,
-            )
+            return grid_for_series(leaf_paths(glob), offset_s, consolidate)
 
         has_tags = "seriesByTag" in target and self._has_tag_index()
         has_events = "events" in target and self._has_events()
@@ -737,9 +731,7 @@ class Engine:
         # seed the context step from the first glob's tier so interval-string
         # windows and generators see the render resolution
         first_paths = (
-            [p["path"] for p in self.get_paths(globs[0]) if p["leaf"]]
-            if globs
-            else self.get_tagged_series("name=~.")[:1]
+            leaf_paths(globs[0]) if globs else self.get_tagged_series("name=~.")[:1]
         )
         if first_paths:
             d0 = self.config.route(first_paths[0])

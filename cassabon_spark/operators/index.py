@@ -151,9 +151,30 @@ def update_index_incremental(spark, metrics: DataFrame, index_dir: str) -> None:
     if has_index:
         existing = spark.read.parquet(index_dir)
         paths = paths.join(existing.filter(F.col("leaf")).select("path"), "path", "left_anti")
+        if paths.isEmpty():
+            # no first sightings: appending would add an empty parquet part
+            # that every later index scan lists and opens
+            return
         new_rows = expand_ancestors(paths).join(
             existing.select("path"), "path", "left_anti"
         )
     else:
         new_rows = expand_ancestors(paths)
     new_rows.write.mode("append").parquet(index_dir)
+
+
+def update_indexes(spark, metrics: DataFrame, index_dir: str, tag_index_dir: str) -> None:
+    """New paths of `metrics` into both indexes: dot paths into the path
+    index, tagged series (`;tag=v`) into the tag index, never the dot tree
+    (operators/tags.py). Shared by Engine.ingest_lines and the streaming
+    foreachBatch writer."""
+    from cassabon_spark.operators.tags import (
+        is_tagged_expr,
+        update_tag_index_incremental,
+    )
+
+    paths = metrics.select("path").distinct()
+    update_index_incremental(spark, paths.filter(~is_tagged_expr("path")), index_dir)
+    tagged = paths.filter(is_tagged_expr("path"))
+    if not tagged.isEmpty():
+        update_tag_index_incremental(spark, tagged, tag_index_dir)

@@ -136,6 +136,8 @@ def update_tag_index_incremental(
     if has:
         existing = spark.read.parquet(tag_index_dir).select("series").distinct()
         new = new.join(existing, "series", "left_anti")
+        if new.isEmpty():
+            return  # same as the path index: no empty parquet parts
     new.write.mode("append").parquet(tag_index_dir)
 
 

@@ -10,6 +10,10 @@ Spark-first design:
     -> route (A5, when-chain)
     -> PER-MICROBATCH partial aggregation (rollup_finest on the batch)
     -> append partial tier rows to the partitioned parquet store (A9)
+    -> new paths from the same rolled-up rows into the path/tag indexes
+
+The microbatch's source is read once: with the index on, the rolled-up rows
+are materialised once and every consumer reads them.
 
 Key design decision — STATELESS partial aggregation + merge-at-read:
 the reference accepts arbitrarily late data by merging rows at read time
@@ -22,13 +26,21 @@ path already re-aggregates on scan — so:
     SURVEY §7 hard-part 4 disappears),
   * no watermark needed for correctness (late rows just append more
     partials; exactly the reference's "accept anything" semantics),
-  * exactly-once via checkpointing + idempotent-by-merge appends.
+  * exactly-once in snapshot mode: each append carries the txn
+    (query id from the checkpoint, batch id), so a batch replayed after a
+    crash between the manifest commit and the offset commit is a no-op.
+    Partials are additive, not idempotent: the 'dirs' format has no txn
+    log, so there a replay appends the batch's partials twice
+    (at-least-once).
 A periodic `compact_store` job re-aggregates partials into one row per
 (path, window) to keep read amplification bounded — the analog of the
 reference's flush, but it only ever touches recent date-bucket partitions.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,56 +58,85 @@ def _write_batch(
     index_dir: str | None = None,
     table_format: str = "dirs",
     compact_zorder: bool = True,
+    stream_id: str | None = None,
 ):
+    """One microbatch: parse -> route -> rollup_finest, then feed the store
+    append and (with `index_dir`) the path and tag indexes from the rolled-up
+    rows. `stream_id` keys snapshot appends as (stream_id, batch_id), so a
+    batch replayed after a crash commits nothing twice."""
     metrics, _ = parse_carbon_lines(batch_df, line_col="value")
     finest = rollup_finest(route(metrics, config), config)
     if finest is None:
         return
-    bucketed = finest.withColumn("date_bucket", F.date_format("time", "yyyy-MM-dd"))
-    if table_format == "snapshot":
-        # one atomic manifest commit per microbatch: readers never see a
-        # half-written batch, and a crash before commit leaves only orphan
-        # files for vacuum (sources/snapshot.py)
-        from cassabon_spark.sources.snapshot import SnapshotTable
+    # With the index on, three consumers read the batch; materialise the
+    # rollup once so the source is scanned once, not once per consumer.
+    # Every parsed path reaches `finest` (rollup_finest groups by path and
+    # drops nothing), so the indexes lose nothing by reading it.
+    # localCheckpoint, not persist: a cached plan keeps all shuffle
+    # partitions (canChangeCachedPlanOutputPartitioning is off), so each
+    # batch would stage one store file per shuffle partition; the
+    # checkpoint keeps AQE's coalesced partitioning.
+    shared = index_dir is not None
+    if shared:
+        finest = finest.localCheckpoint()
+    try:
+        bucketed = finest.withColumn(
+            "date_bucket", F.date_format("time", "yyyy-MM-dd")
+        )
+        if table_format == "snapshot":
+            # one atomic manifest commit per microbatch: readers never see a
+            # half-written batch, and a crash before commit leaves only
+            # orphan files for vacuum (sources/snapshot.py)
+            from cassabon_spark.sources.snapshot import SnapshotTable
 
-        table = SnapshotTable(batch_df.sparkSession, out_dir)
-        table.append(bucketed, partition_cols=("resolution_s", "date_bucket"))
-        # threshold-triggered auto-compaction: partitions accumulating many
-        # small partial files merge back to one row per (path, window);
-        # manifests beyond the retain window are pruned so head resolution
-        # and file listings stay O(1) in commit count. No-op cost: one
-        # manifest read per batch. Default transform z-orders the rewrite
-        # by (path, time) so manifest stats pruning bites on both read
-        # dims (compact_zorder=False keeps the 1-file path-major sort).
-        table.auto_compact(
-            compact_snapshot_partition_zorder
-            if compact_zorder
-            else compact_snapshot_partition,
-            partition_cols=("resolution_s", "date_bucket"),
-        )
-    else:
-        (
-            bucketed.write.partitionBy("resolution_s", "date_bucket")
-            .mode("append")
-            .parquet(out_dir)
-        )
-    if index_dir is not None:
-        # reference step 8 (SURVEY §3.1): new paths ride the same batch into
-        # the index, anti-joined so only first sightings expand; tagged
-        # series go to the tag index, not the dot tree (operators/tags.py)
-        from cassabon_spark.operators.index import update_index_incremental
-        from cassabon_spark.operators.tags import (
-            is_tagged_expr,
-            update_tag_index_incremental,
-        )
+            table = SnapshotTable(batch_df.sparkSession, out_dir)
+            table.append(
+                bucketed,
+                partition_cols=("resolution_s", "date_bucket"),
+                txn=None if stream_id is None else (stream_id, int(batch_id)),
+            )
+            # threshold-triggered auto-compaction: partitions accumulating
+            # many small partial files merge back to one row per (path,
+            # window); manifests beyond the retain window are pruned so head
+            # resolution and file listings stay O(1) in commit count. No-op
+            # cost: one manifest read per batch. Default transform z-orders
+            # the rewrite by (path, time) so manifest stats pruning bites on
+            # both read dims (compact_zorder=False keeps the 1-file
+            # path-major sort).
+            table.auto_compact(
+                compact_snapshot_partition_zorder
+                if compact_zorder
+                else compact_snapshot_partition,
+                partition_cols=("resolution_s", "date_bucket"),
+            )
+        else:
+            (
+                bucketed.write.partitionBy("resolution_s", "date_bucket")
+                .mode("append")
+                .parquet(out_dir)
+            )
+        if shared:
+            # reference step 8 (SURVEY §3.1): new paths ride the same batch
+            # into the index, anti-joined so only first sightings expand
+            from cassabon_spark.operators.index import update_indexes
 
-        spark_b = batch_df.sparkSession
-        update_index_incremental(
-            spark_b, metrics.filter(~is_tagged_expr("path")), index_dir
-        )
-        tagged = metrics.filter(is_tagged_expr("path"))
-        if not tagged.isEmpty():
-            update_tag_index_incremental(spark_b, tagged, f"{index_dir}_tags")
+            update_indexes(
+                batch_df.sparkSession, finest, index_dir, f"{index_dir}_tags"
+            )
+    finally:
+        if shared:
+            # the checkpoint's frame is the LogicalRDD over the pinned rows
+            finest._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _stream_id(checkpoint_dir: str | None) -> str | None:
+    """The query id Spark keeps in `<checkpoint>/metadata`: the same across
+    restarts from one checkpoint, new when the checkpoint is recreated (so a
+    deleted-and-reused checkpoint dir never inherits old txn versions)."""
+    if not checkpoint_dir:
+        return None
+    with open(os.path.join(checkpoint_dir, "metadata")) as fh:
+        return json.loads(fh.readline())["id"]
 
 
 def kafka_records_to_lines(records: DataFrame) -> DataFrame:
@@ -184,11 +225,18 @@ def ingest_stream(
         source_options=source_options,
         max_files_per_trigger=max_files_per_trigger,
     )
-    writer = lines.writeStream.foreachBatch(
-        lambda df, bid: _write_batch(
-            df, bid, config, out_dir, index_dir, table_format, compact_zorder
+
+    def process(df, bid):
+        # snapshot appends are keyed by (query id, batch id); the query id
+        # is only in the checkpoint once the query has started
+        sid = _stream_id(checkpoint_dir) if table_format == "snapshot" else None
+        _write_batch(
+            df, bid, config, out_dir, index_dir, table_format, compact_zorder, sid
         )
-    ).option("checkpointLocation", checkpoint_dir)
+
+    writer = lines.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
     if available_now:
         writer = writer.trigger(availableNow=True)
     else:
