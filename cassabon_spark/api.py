@@ -27,8 +27,10 @@ protect. The server binds port 0 by default (ephemeral) for tests.
 from __future__ import annotations
 
 import json
+import math
 import threading
 import time
+from collections import deque
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
 from urllib.parse import parse_qs, urlparse
@@ -38,9 +40,22 @@ from cassabon_spark.engine import Engine
 VERSION = "1.0.0"
 
 _STATS_LOCK = threading.Lock()
+#: latencies kept per route for the /stats percentiles (the most recent ones)
+LATENCY_SAMPLE = 1024
+
+
+def _percentiles(sample) -> dict:
+    """Nearest-rank p50/p90/p99 of a latency sample, in ms."""
+    xs = sorted(sample)
+    return {
+        f"p{q}_ms": xs[max(math.ceil(q / 100 * len(xs)) - 1, 0)] if xs else None
+        for q in (50, 90, 99)
+    }
 
 
 def _make_handler(engine: Engine, healthcheck_file: str | None, stats: dict):
+    samples: dict[str, deque] = {}
+
     class Handler(BaseHTTPRequestHandler):
         # quiet request logging (tests); the reference logs via middleware
         def log_message(self, fmt, *args):  # noqa: D102
@@ -49,15 +64,15 @@ def _make_handler(engine: Engine, healthcheck_file: str | None, stats: dict):
         def _track(self, route: str, t0: float, status: int):
             # the reference's requestLogger middleware emits a statsd timer
             # per request (api/requestlogger.go:44); same shape, in-process
-            import time as _t
-
             key = f"{self.command} {route}"
+            ms = (time.time() - t0) * 1000
             with _STATS_LOCK:
                 s = stats.setdefault(key, {"count": 0, "errors": 0, "total_ms": 0.0})
                 s["count"] += 1
-                s["total_ms"] = round(s["total_ms"] + (_t.time() - t0) * 1000, 3)
+                s["total_ms"] = round(s["total_ms"] + ms, 3)
                 if status >= 400:
                     s["errors"] += 1
+                samples.setdefault(key, deque(maxlen=LATENCY_SAMPLE)).append(round(ms, 3))
 
         # ------------------------------------------------------- plumbing
         def _json(self, obj, status=200):
@@ -288,7 +303,10 @@ def _make_handler(engine: Engine, healthcheck_file: str | None, stats: dict):
                     self._json(engine.get_events(frm, until, tags or None))
                 elif u.path == "/stats":
                     with _STATS_LOCK:
-                        snap = {k: dict(v) for k, v in stats.items()}
+                        snap = {
+                            k: {**v, **_percentiles(samples.get(k, ()))}
+                            for k, v in stats.items()
+                        }
                     self._json(
                         {
                             "routes": snap,

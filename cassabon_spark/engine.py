@@ -27,6 +27,8 @@ Scale notes:
 from __future__ import annotations
 
 import shutil
+import threading
+import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,9 +38,11 @@ from pyspark.errors.exceptions.captured import AnalysisException
 from cassabon_spark.config import RollupConfig
 from cassabon_spark.operators import query as qmod
 from cassabon_spark.operators.index import (
+    PathIndex,
     glob_depth,
     glob_to_regex,
-    search_glob,
+    load_index,
+    merge_index_rows,
     update_indexes,
 )
 from cassabon_spark.operators.rollup import (
@@ -95,7 +99,11 @@ class Engine:
         # this short-circuits the whole scan for them.
         self._result_cache: dict[tuple, dict] = {}
         self._result_cache_max = 256
+        self._result_cache_lock = threading.Lock()  # the HTTP server is threaded
         self.cache_stats = {"hits": 0, "misses": 0}
+        # driver-side copy of the path index (operators.index.load_index),
+        # replaced whole whenever the index directory's file listing changes
+        self._index_copy: PathIndex | None = None
         # manifest-pruning effectiveness across store_for reads (snapshot
         # mode): files the manifest listed vs files actually planned
         self.prune_stats = {"files_total": 0, "files_read": 0, "reads": 0}
@@ -177,7 +185,12 @@ class Engine:
 
     @property
     def index(self) -> DataFrame:
-        return self.spark.read.parquet(self.index_dir)
+        return merge_index_rows(self.spark.read.parquet(self.index_dir))
+
+    def _path_index(self) -> PathIndex:
+        idx = load_index(self.index_dir, self._index_copy)
+        self._index_copy = idx  # one reference swap: readers never see a half-built copy
+        return idx
 
     def _has_store(self) -> bool:
         if self.table is not None:
@@ -496,15 +509,22 @@ class Engine:
                 "step": step,
                 "series": {p: [None] * n_slots for p in paths},
             }
+        now = int(time.time()) if now_s is None else now_s
         key = None
-        if self.table is not None and now_s is not None:
-            # now_s=None means wall-clock tier selection — not a stable key
-            key = (tuple(sorted(paths)), from_s, to_s, now_s, self.table.version())
-            cached = self._result_cache.get(key)
+        if self.table is not None:
+            # `now` only picks each path's tier, so the key holds the tiers
+            # it picked: wall-clock requests (HTTP passes no now_s) still hit
+            ordered = sorted(paths)
+            tiers = tuple(
+                self.config.select_tier(self.config.route(p).expression, from_s, now).window_s
+                for p in ordered
+            )
+            key = (tuple(ordered), from_s, to_s, tiers, self.table.version())
+            with self._result_cache_lock:
+                cached = self._result_cache.get(key)
+                self.cache_stats["hits" if cached is not None else "misses"] += 1
             if cached is not None:
-                self.cache_stats["hits"] += 1
                 return cached
-            self.cache_stats["misses"] += 1
         resp = qmod.query_metrics(
             self.spark,
             self.store_for(from_s, to_s, paths),
@@ -512,86 +532,21 @@ class Engine:
             paths,
             from_s,
             to_s,
-            now_s=now_s,
+            now_s=now,
             max_datapoints=self.MAX_DATAPOINTS,
             max_cells=self.MAX_RENDER_CELLS,
         )
         if key is not None:
-            if len(self._result_cache) >= self._result_cache_max:
-                self._result_cache.pop(next(iter(self._result_cache)))
-            self._result_cache[key] = resp
+            with self._result_cache_lock:
+                if len(self._result_cache) >= self._result_cache_max:
+                    self._result_cache.pop(next(iter(self._result_cache)))
+                self._result_cache[key] = resp
         return resp
 
     def get_paths(self, glob: str) -> list[dict]:
-        """GET /paths -> [IndexResponse] sorted by path (A17)."""
-        if not self._has_index():
-            return []
-        rows = search_glob(self.index, glob).collect()
-        return [
-            {"path": r["path"], "depth": r["depth"], "tenant": r["tenant"], "leaf": r["leaf"]}
-            for r in rows
-        ]
-
-    def render(
-        self,
-        target_glob: str,
-        from_s: int,
-        to_s: int,
-        funcs: list | None = None,
-        now_s: int | None = None,
-    ) -> dict:
-        """Graphite /render-shaped pipeline: expand the glob against the
-        path index (A17), answer the grid (A10-A16), then apply a chain of
-        series functions (functions.series) — all in-engine; the reference
-        delegates the function step to graphite-web.
-
-        funcs: list of (name, *args) tuples, e.g.
-        [("moving_average", 3), ("scale", 8)]. Returns the MetricResponse
-        dict shape with transformed values.
-        """
-        from cassabon_spark.functions import series as sfn
-        from cassabon_spark.operators.query import normalize_from, query_metrics_df
-
-        paths = [p["path"] for p in self.get_paths(target_glob) if p["leaf"]]
-        if not paths or not self._has_store():
-            return {"from": from_s, "to": to_s, "step": 0, "series": {}}
-        d = self.config.route(paths[0])
-        now = now_s if now_s is not None else int(__import__("time").time())
-        tier = self.config.select_tier(d.expression, from_s, now)
-        step = tier.window_s
-        # same maxDataPoints guard as render_target/get_metrics: coarsen
-        # the fetch step before the spine exists, hard-cap the grid cells
-        slots = max(0, to_s - from_s) // step + 1
-        if self.MAX_DATAPOINTS and slots > self.MAX_DATAPOINTS:
-            step = tier.window_s * -(-slots // self.MAX_DATAPOINTS)
-            slots = max(0, to_s - from_s) // step + 1
-        if len(paths) * slots > self.MAX_RENDER_CELLS:
-            raise ValueError(
-                f"render grid {len(paths)} paths x {slots} slots exceeds "
-                f"MAX_RENDER_CELLS={self.MAX_RENDER_CELLS}"
-            )
-        grid = query_metrics_df(
-            self.spark,
-            self.store_for(from_s, to_s, paths),
-            paths,
-            from_s,
-            to_s,
-            step,
-            d.method,
-            resolution_s=tier.window_s,
-        )
-        for spec in funcs or []:
-            name, *args = spec if isinstance(spec, (list, tuple)) else (spec,)
-            grid = getattr(sfn, name)(grid, *args)
-        series: dict[str, list] = {p: [] for p in paths}
-        for r in grid.orderBy("path", "slot_s").collect():
-            series.setdefault(r["path"], []).append(r["stat"])
-        return {
-            "from": normalize_from(from_s, step),
-            "to": to_s,
-            "step": step,
-            "series": series,
-        }
+        """GET /paths -> [IndexResponse] sorted by path (A17), answered from
+        the driver-side copy of the index: no Spark job."""
+        return self._path_index().glob(glob)
 
     #: maxDataPoints guard defaults (graphite-web's maxDataPoints): renders
     #: asking for more than MAX_DATAPOINTS slots per series consolidate to a
@@ -630,11 +585,15 @@ class Engine:
             target_consolidations,
             target_globs,
         )
-        from cassabon_spark.operators.query import normalize_from, query_metrics_df
+        from cassabon_spark.operators.query import (
+            collect_sorted,
+            normalize_from,
+            query_metrics_df,
+        )
 
         node = parse_target(target)
         globs = target_globs(node)
-        now = now_s if now_s is not None else int(__import__("time").time())
+        now = now_s if now_s is not None else int(time.time())
         md = max_datapoints if max_datapoints is not None else self.MAX_DATAPOINTS
         method_map = {
             "avg": "average", "sum": "sum", "min": "min", "max": "max",
@@ -750,7 +709,7 @@ class Engine:
         )
         series: dict[str, list] = {}
         slots_by_path: dict[str, list[int]] = {}
-        for r in grid.orderBy(*order).collect():
+        for r in collect_sorted(grid, order):
             series.setdefault(r["path"], []).append(r["stat"])
             slots_by_path.setdefault(r["path"], []).append(r["slot_s"])
         fetch_step = step_holder.get("step", 0)
@@ -854,10 +813,9 @@ class Engine:
                     "from": str(r["t_min"]),
                     "to": str(r["t_max"]),
                 }
-        if self._has_index():
-            idx = self.index
-            out["index_entries"] = idx.count()
-            out["leaf_paths"] = idx.filter(F.col("leaf")).count()
+        buckets = self._path_index().by_depth.values()
+        out["index_entries"] = sum(len(b) for b in buckets)
+        out["leaf_paths"] = sum(leaf for b in buckets for _, _, _, leaf in b)
         return out
 
     # ------------------------------------------------------------ deletes

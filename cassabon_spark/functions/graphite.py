@@ -9,8 +9,8 @@ globs, e.g.
     summarize(nonNegativeDerivative(evt.*), "1h", "sum")
 
 This module parses that grammar and evaluates it against the engine's
-gap-filled grid DataFrames using functions.series — so `Engine.render`
-accepts real Graphite targets, not just pre-built function lists. Parsing is
+gap-filled grid DataFrames using functions.series — so
+`Engine.render_target` accepts real Graphite targets. Parsing is
 driver-side (strings are tiny); all evaluation stays in DataFrame land.
 
 Grammar (graphite-web render/grammar.py, reimplemented from the public

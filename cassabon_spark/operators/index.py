@@ -10,14 +10,19 @@ a small DataFrame/table of (path, depth, tenant, leaf):
   - DELETE /paths is routed but unimplemented in the reference
     (indexmanager.go:294-296) — implemented here.
 
-Spark-first: expansion is posexplode over split — no Python row loop; the
-index table is tiny relative to the data (distinct paths), so glob queries
-are a filter + orderBy over a broadcastable table.
+Spark-first: expansion is posexplode over split — no Python row loop. The
+index table is tiny relative to the data (distinct paths), so the serving
+side reads it onto the driver (load_index) and answers a glob with a regex
+over one depth bucket, like the reference's in-memory leaf set
+(indexmanager.go:142-184, metricmanager.go:82-87); search_glob is the same
+match as a Spark filter.
 """
 
 from __future__ import annotations
 
+import os
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -71,7 +76,8 @@ def glob_to_regex(glob: str) -> str:
     depth-scoped). Extension beyond the reference, matching the glob
     surface graphite-web finders accept: '?' (one char), '{a,b}'
     (alternation), '[0-9]' (char class, passed through). Everything else is
-    regex-escaped."""
+    regex-escaped. The result means the same to Python's re and to Java's
+    rlike."""
     import re as _re
 
     out, i, n = [], 0, len(glob)
@@ -115,6 +121,73 @@ def search_glob(index: DataFrame, glob: str) -> DataFrame:
     )
 
 
+class PathIndex(NamedTuple):
+    """Driver-side copy of one index directory: `listing` is the
+    (name, size, mtime_ns) of every parquet part it was read from, `by_depth`
+    maps depth -> (path, depth, tenant, leaf) rows sorted by path, one row
+    per (path, depth, tenant). Never mutated after load_index builds it, so
+    threads can share it without a lock."""
+
+    listing: tuple
+    by_depth: dict
+
+    def glob(self, glob: str) -> list[dict]:
+        """A17 on the driver: depth-matched regex search, sorted by path
+        asc — the rows and order search_glob(...).collect() returns."""
+        rx = re.compile(glob_to_regex(glob))
+        return [
+            {"path": p, "depth": d, "tenant": t, "leaf": leaf}
+            for p, d, t, leaf in self.by_depth.get(glob_depth(glob), ())
+            if rx.search(p)
+        ]
+
+
+def _parquet_listing(index_dir: str) -> tuple:
+    try:
+        entries = list(os.scandir(index_dir))
+    except FileNotFoundError:
+        return ()
+    out = []
+    for e in entries:
+        # Spark's own rule: '_' and '.' files (_SUCCESS, .crc) are not data
+        if e.name.endswith(".parquet") and not e.name.startswith(("_", ".")):
+            st = e.stat()
+            out.append((e.name, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def load_index(index_dir: str, cached: PathIndex | None = None) -> PathIndex:
+    """Read the index directory onto the driver with pyarrow (no Spark job).
+    Returns `cached` unchanged while the directory's parquet listing is the
+    one it was read from; any append (update_index_incremental), rewrite
+    (Engine.delete_paths renames a new directory into place) or writer in
+    another process changes the listing and forces a re-read. Rows of the
+    same (path, depth, tenant) merge with max(leaf): a path first indexed as
+    a prefix and later ingested as a metric has both rows stored."""
+    import pyarrow.parquet as pq
+
+    listing = _parquet_listing(index_dir)
+    if cached is not None and cached.listing == listing:
+        return cached
+    leaf: dict[tuple, bool] = {}
+    for name, _, _ in listing:
+        t = pq.read_table(
+            os.path.join(index_dir, name), columns=["path", "depth", "tenant", "leaf"]
+        ).to_pydict()
+        for p, d, tn, lf in zip(t["path"], t["depth"], t["tenant"], t["leaf"]):
+            leaf[(p, d, tn)] = leaf.get((p, d, tn), False) or bool(lf)
+    by_depth: dict[int, list] = {}
+    for (p, d, t), lf in sorted(leaf.items()):
+        by_depth.setdefault(d, []).append((p, d, t, lf))
+    return PathIndex(listing, {d: tuple(rows) for d, rows in by_depth.items()})
+
+
+def merge_index_rows(index: DataFrame) -> DataFrame:
+    """One row per (path, depth, tenant), leaf = max(leaf): the Spark side
+    of load_index's merge."""
+    return index.groupBy("path", "depth", "tenant").agg(F.max("leaf").alias("leaf"))
+
+
 def delete_paths(index: DataFrame, glob: str) -> DataFrame:
     """A20 (unimplemented in the reference — we implement it): remove every
     index row matching the glob at its depth; returns the surviving index."""
@@ -143,9 +216,11 @@ def update_index_incremental(spark, metrics: DataFrame, index_dir: str) -> None:
     new-path detection during ingest (datastore/metricstore.go:67-74 ->
     indexmanager.go:225-278) with one durable parquet table instead of ES.
     Used by both the Engine facade and the streaming foreachBatch writer.
-    """
-    import os
 
+    A metric whose path is already stored as a non-leaf prefix (a.b after
+    a.b.c) appends a leaf row next to the stored one; readers merge the two
+    with max(leaf) (load_index, merge_index_rows).
+    """
     paths = metrics.select("path").distinct()
     has_index = os.path.isdir(index_dir) and any(os.scandir(index_dir))
     if has_index:
@@ -155,8 +230,11 @@ def update_index_incremental(spark, metrics: DataFrame, index_dir: str) -> None:
             # no first sightings: appending would add an empty parquet part
             # that every later index scan lists and opens
             return
+        stored = existing.select(F.col("path").alias("_p"), F.col("leaf").alias("_leaf"))
         new_rows = expand_ancestors(paths).join(
-            existing.select("path"), "path", "left_anti"
+            stored,
+            (F.col("path") == F.col("_p")) & (F.col("_leaf") | ~F.col("leaf")),
+            "left_anti",
         )
     else:
         new_rows = expand_ancestors(paths)

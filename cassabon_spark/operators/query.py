@@ -125,6 +125,17 @@ def query_metrics_df(
     return spine.join(bucketed, ["path", "slot_s"], "left").select("path", "slot_s", "stat")
 
 
+def collect_sorted(df: DataFrame, keys: list[str]) -> list:
+    """collect(), then sort on the driver by `keys` ascending, nulls first
+    (orderBy's order). Read results are already bounded by max_cells, so a
+    global orderBy before the collect would only add its range-sampling job
+    and a shuffle."""
+    idx = [df.columns.index(k) for k in keys]
+    rows = df.collect()
+    rows.sort(key=lambda r: tuple((r[i] is not None, r[i]) for i in idx))
+    return rows
+
+
 def query_metrics(
     spark: SparkSession,
     store: DataFrame,
@@ -181,8 +192,7 @@ def query_metrics(
         df = query_metrics_df(
             spark, store, grp_paths, from_s, to_s, grp_step, method, resolution_s=res
         )
-        rows = df.orderBy("path", "slot_s").collect()
-        for r in rows:
+        for r in collect_sorted(df, ["path", "slot_s"]):
             series.setdefault(r["path"], []).append(r["stat"])
     return {"from": nfrom, "to": to_s, "step": step, "series": series}
 

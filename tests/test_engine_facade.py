@@ -175,6 +175,20 @@ def test_engine_stats(spark, tmp_path):
     assert s["leaf_paths"] == 2
 
 
+def test_path_first_seen_as_prefix_becomes_leaf(spark, tmp_path):
+    """a.b indexed as a prefix of a.b.c, then ingested as a metric itself:
+    one a.b row, now a leaf, so a.* renders it."""
+    eng = _engine(spark, str(tmp_path))
+    eng.ingest_lines(_lines(spark, ["a.b.c 1.0 1001"]))
+    eng.ingest_lines(_lines(spark, ["a.b 2.0 1002"]))
+    assert eng.get_paths("a.*") == [
+        {"path": "a.b", "depth": 2, "tenant": "", "leaf": True}
+    ]
+    assert eng.stats()["leaf_paths"] == 2  # a.b.c and a.b
+    assert eng.index.filter(F.col("path") == "a.b").count() == 1
+    assert list(eng.render_target("a.*", 995, 1015, now_s=2000)["series"]) == ["a.b"]
+
+
 def test_render_pipeline_with_function_chain(spark, tmp_path):
     """Graphite /render in-engine: glob target -> index expansion -> grid ->
     function chain."""
@@ -187,14 +201,13 @@ def test_render_pipeline_with_function_chain(spark, tmp_path):
         )
     )
     # raw render over the glob: both leaves expanded
-    resp = eng.render("svc.*.lat", 995, 1025, now_s=2000)
+    resp = eng.render_target("svc.*.lat", 995, 1025, now_s=2000)
     assert set(resp["series"]) == {"svc.api.lat", "svc.db.lat"}
     assert resp["series"]["svc.api.lat"] == [None, 5.5, 15.5]
 
     # chained: scale then absolute-of-derivative
-    resp2 = eng.render(
-        "svc.api.*", 995, 1025, funcs=[("scale", 2), ("derivative",), ("absolute",)],
-        now_s=2000,
+    resp2 = eng.render_target(
+        "absolute(derivative(scale(svc.api.*,2)))", 995, 1025, now_s=2000
     )
     assert resp2["series"]["svc.api.lat"] == [None, None, 20.0]  # |2*15.5 - 2*5.5|
 

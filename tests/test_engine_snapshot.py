@@ -139,9 +139,50 @@ def test_snapshot_result_cache_hits_and_version_invalidation(spark, tmp_path, mo
     assert calls["n"] == 2
     assert r3["series"]["c.x"] == [None, 3.0]  # (1+3+5)/3 in the 1010 window
 
-    # wall-clock queries (now_s=None) bypass the cache entirely
+    # a wall-clock query (now_s=None) of this old range selects the coarsest
+    # tier, not the 10 s one cached above: another key, so a miss
     eng.get_metrics(["c.x"], 995, 1015)
     assert eng.cache_stats["hits"] == 1
+
+
+def test_result_cache_hits_without_now_s(spark, tmp_path):
+    """HTTP /metrics passes no now_s: the key holds the tier that the wall
+    clock selects, so repeated requests hit and any write still misses."""
+    import time
+
+    eng = _engine(spark, str(tmp_path))
+    t = int(time.time()) - 120
+    eng.ingest_lines(_lines(spark, [f"c.x 1.0 {t}", f"c.x 3.0 {t + 1}"]))
+    r1 = eng.get_metrics(["c.x"], t - 30, t + 30)
+    r2 = eng.get_metrics(["c.x"], t - 30, t + 30)
+    assert r1 == r2 and r1["step"] == 10
+    assert eng.cache_stats == {"hits": 1, "misses": 1}
+    eng.ingest_lines(_lines(spark, [f"c.x 5.0 {t + 2}"]))
+    r3 = eng.get_metrics(["c.x"], t - 30, t + 30)
+    assert eng.cache_stats == {"hits": 1, "misses": 2}
+    assert r3 != r1
+
+    # threaded HTTP handlers share the cache: no lost counter update
+    import sys
+    import threading
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(
+                target=lambda: [eng.get_metrics(["c.x"], t - 30, t + 30) for _ in range(25)]
+            )
+            for _ in range(8)
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+        assert not any(th.is_alive() for th in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    assert eng.cache_stats == {"hits": 1 + 8 * 25, "misses": 2}
 
 
 def test_upsert_rollups_point_correction(spark, tmp_path):

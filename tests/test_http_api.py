@@ -126,6 +126,9 @@ def test_stats_route_counts_requests(api):
     routes = body["routes"]
     assert routes["GET /paths"]["count"] >= 1
     assert routes["GET /paths"]["total_ms"] > 0
+    # latency distribution from the bounded per-route sample
+    p = routes["GET /paths"]
+    assert 0 < p["p50_ms"] <= p["p90_ms"] <= p["p99_ms"] <= p["total_ms"]
     # the 404 from the earlier test is tallied as an error
     assert any(v["errors"] >= 1 for v in routes.values())
 

@@ -3,14 +3,20 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
+from cassabon_spark.config import RollupConfig
+from cassabon_spark.engine import Engine
 from cassabon_spark.functions.pearson import pearson_hash8, pearson_hash64, peer_index
 from cassabon_spark.operators.index import (
     delete_paths,
     expand_ancestors,
     glob_to_regex,
     search_glob,
+    update_index_incremental,
 )
+
+_CFG = RollupConfig.from_dict({"default": {"method": "average", "windows": ["10s:1h"]}})
 
 
 def test_pearson_reference_goldens():
@@ -117,3 +123,42 @@ def test_delete_paths_depth_scoped(spark):
     kept = {r["path"] for r in delete_paths(idx, "foo.*").collect()}
     # only depth-2 matches removed; deeper and shallower survive
     assert kept == {"foo", "foo.a.b"}
+
+
+_PARITY_PATHS = ["a.web.err", "a.api.err", "a.1", "a.2", "a+b.c", "web.x", "api.y", "1.z", "b"]
+
+
+@pytest.fixture(scope="module")
+def parity_engine(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("parity")
+    update_index_incremental(
+        spark, spark.createDataFrame([(p,) for p in _PARITY_PATHS], "path string"), str(d / "idx")
+    )
+    return Engine(spark, _CFG, str(d / "store"), str(d / "idx"))
+
+
+@pytest.mark.parametrize(
+    "glob", ["*", "a.*", "?", "{web,api}", "[12]", "a.[12]", "a+b.c", "nomatch.*"]
+)
+def test_driver_glob_matches_spark_rlike(spark, parity_engine, glob):
+    """Engine.get_paths (Python re over the driver-side copy) returns exactly
+    the rows, in order, of search_glob (Java rlike + orderBy)."""
+    want = [r.asDict() for r in search_glob(parity_engine.index, glob).collect()]
+    assert parity_engine.get_paths(glob) == want
+    if glob == "nomatch.*":
+        assert want == []
+    if glob == "a+b.c":
+        assert [r["path"] for r in want] == ["a+b.c"]  # '+' is literal
+
+
+def test_driver_index_sees_appends_and_deletes(spark, tmp_path):
+    eng = Engine(spark, _CFG, str(tmp_path / "store"), str(tmp_path / "idx"))
+    assert eng.get_paths("x.*") == []
+    for p in ("x.a", "x.b"):
+        update_index_incremental(
+            spark, spark.createDataFrame([(p,)], "path string"), eng.index_dir
+        )
+        # each append is visible on the very next lookup
+        assert [r["path"] for r in eng.get_paths("x.*")][-1] == p
+    assert eng.delete_paths("x.a") == 1
+    assert [r["path"] for r in eng.get_paths("x.*")] == ["x.b"]
