@@ -34,6 +34,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors.exceptions.captured import AnalysisException
+from pyspark.sql.types import StructType
 
 from cassabon_spark.config import RollupConfig
 from cassabon_spark.operators import query as qmod
@@ -51,6 +52,7 @@ from cassabon_spark.operators.rollup import (
     sweep_retention,
     write_rollups,
 )
+from cassabon_spark.session import empty_frame
 from cassabon_spark.sources.carbon import parse_carbon_lines
 
 
@@ -178,9 +180,7 @@ class Engine:
             schema = self.table.snapshot(v).get("schema")
             if schema is None:
                 raise ValueError(f"snapshot table {self.store_dir} has no commits yet")
-            from pyspark.sql.types import StructType
-
-            return self.spark.createDataFrame([], StructType.fromJson(schema))
+            return empty_frame(self.spark, StructType.fromJson(schema))
         return self.table.read_files(kept, schema=self.table.snapshot(v).get("schema"))
 
     @property
@@ -615,9 +615,7 @@ class Engine:
         ):
             f, t = from_s + offset_s, to_s + offset_s
             if not paths:
-                return self.spark.createDataFrame(
-                    [], "path string, slot_s bigint, stat double"
-                )
+                return empty_frame(self.spark, "path string, slot_s bigint, stat double")
             d = self.config.route(paths[0])
             tier = self.config.select_tier(d.expression, f, now)
             step = tier.window_s

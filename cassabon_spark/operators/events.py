@@ -25,6 +25,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cassabon_spark.session import empty_frame
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("id", LongType()),
@@ -69,7 +71,7 @@ def append_events(spark: SparkSession, events_dir: str, rows: list[dict]) -> lis
 
 def events_df(spark: SparkSession, events_dir: str) -> DataFrame:
     if not Path(events_dir).exists():
-        return spark.createDataFrame([], EVENTS_SCHEMA)
+        return empty_frame(spark, EVENTS_SCHEMA)
     return spark.read.parquet(events_dir)
 
 

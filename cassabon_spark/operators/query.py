@@ -15,12 +15,13 @@ Reference lifecycle (datastore/metricquery.go:86-229):
 Spark-first shape: tier selection is driver-side Python over the broadcast
 rollup config; the scan is a partition-pruned parquet read with path/time
 predicates pushed down; merge is ONE hash re-aggregation on (path, slot); the
-spine is a tiny generated sequence left-joined against the (bounded,
-paths x slots sized) aggregate. Nothing here grows with raw data volume
-except the pruned scan itself.
+spine is built in the JVM (a `range` of slots, each exploding the path list
+shipped as one JSON literal) and left-joined against the (bounded,
+paths x slots sized) aggregate, so a read starts no Python worker. Nothing
+here grows with raw data volume except the pruned scan itself.
 
 Documented divergence from the reference: our grid is inclusive of both
-normalFrom and to (sequence(normalFrom, to, step)); the reference's trailing
+normalFrom and to (range(normalFrom, to + 1, step)); the reference's trailing
 pad stops strictly before `to` (metricquery.go:215) while its interior loop
 can emit a row AT `to` — a data-dependent off-by-one we replace with a
 deterministic rule.
@@ -28,6 +29,7 @@ deterministic rule.
 
 from __future__ import annotations
 
+import json
 import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,13 +85,16 @@ def _rebucket(scan: DataFrame, step: int, method: str) -> DataFrame:
 
 
 def _spine(spark: SparkSession, paths: list[str], nfrom: int, to_s: int, step: int) -> DataFrame:
-    """Dense (path, slot) grid: one row per step in [normalFrom, to] (A13)."""
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-    return pdf.select(
-        "path",
-        F.explode(
-            F.sequence(F.lit(nfrom).cast("bigint"), F.lit(to_s).cast("bigint"), F.lit(step))
-        ).alias("slot_s"),
+    """Dense (path, slot) grid: one row per step in [normalFrom, to] (A13),
+    empty when normalization stepped past `to`. Built in the JVM: the slots
+    are a one-partition `range` (the grid is bounded by the caller's cells
+    cap and collected anyway) and the paths one JSON literal, which the
+    optimizer folds to a constant array; JSON escapes any character a path
+    can hold. A Python-side frame would start Python-worker tasks on every
+    read."""
+    names = F.from_json(F.lit(json.dumps(paths)), "array<string>")
+    return spark.range(nfrom, to_s + 1, step, numPartitions=1).select(
+        F.explode(names).alias("path"), F.col("id").alias("slot_s")
     )
 
 
@@ -107,11 +112,6 @@ def query_metrics_df(
     returns (path STRING, slot_s BIGINT, stat DOUBLE nullable), dense grid.
     """
     nfrom = normalize_from(from_s, step)
-    if nfrom > to_s:
-        # always-advance normalization stepped past `to`: the grid is empty
-        # (the reference returns zero slots for such a range; Spark's
-        # sequence() would throw on the inverted bounds)
-        return spark.createDataFrame([], "path string, slot_s bigint, stat double")
     scan = store.filter(F.col("path").isin(paths))
     if resolution_s is not None and "resolution_s" in store.columns:
         scan = scan.filter(F.col("resolution_s") == resolution_s)  # A10 partition pruning

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "cassabon-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -48,3 +49,10 @@ def prep(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # static conf on some builds; AQE default-on in Spark 4
     return spark
+
+
+def empty_frame(spark: SparkSession, schema: StructType | str) -> DataFrame:
+    """A zero-row frame of `schema` over an RDD with no partitions, so
+    collecting it starts no task. `spark.createDataFrame([], schema)`
+    parallelizes the empty list into Python-worker tasks instead."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)

@@ -80,6 +80,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from cassabon_spark.session import empty_frame
+
 MANIFEST_DIR = "_manifests"
 STAGING_DIR = "_staging"
 
@@ -509,7 +511,7 @@ class SnapshotTable:
             schema = snap.get("schema")
             if schema is None:
                 raise ValueError(f"snapshot table {self.root} has no commits yet")
-            return self.spark.createDataFrame([], StructType.fromJson(schema))
+            return empty_frame(self.spark, StructType.fromJson(schema))
         return self.read_files(files, schema=snap.get("schema"))
 
     # ------------------------------------------------------------ write path
@@ -878,7 +880,7 @@ class SnapshotTable:
             snap = self.snapshot(to_v if to_v is not None else since_version)
             if snap.get("schema") is None:
                 raise ValueError("empty table has no changes")
-            return self.spark.createDataFrame([], StructType.fromJson(snap["schema"]))
+            return empty_frame(self.spark, StructType.fromJson(snap["schema"]))
         prev_paths: set | None = None  # only materialized for legacy manifests
         added: list[dict] = []
         for v in range(since_version + 1, to_v + 1):
@@ -905,7 +907,7 @@ class SnapshotTable:
                 prev_paths |= {f["path"] for f in man.get("add") or ()}
         schema = self.snapshot(to_v).get("schema")
         if not added:
-            return self.spark.createDataFrame([], StructType.fromJson(schema))
+            return empty_frame(self.spark, StructType.fromJson(schema))
         return self.read_files(added, schema=schema)
 
     # ------------------------------------------------------------ mutations

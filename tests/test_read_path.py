@@ -5,11 +5,14 @@ multi-path fan-in, delete dry-run (FIXTURES.md §1.6)."""
 from __future__ import annotations
 
 import math
+import uuid
 
 import pyspark.sql.functions as F
 import pytest
 
 from cassabon_spark.config import RollupConfig
+from cassabon_spark.engine import Engine
+from cassabon_spark.operators import query as qmod
 from cassabon_spark.operators.query import (
     delete_metrics,
     merge_slot_expr,
@@ -146,8 +149,7 @@ def test_store_read_partition_prunes_tier_and_date(spark, tmp_path):
 
 def test_sub_step_range_returns_empty_grid(spark):
     """When always-advance normalization steps past `to` (range shorter than
-    one step), the grid is empty instead of throwing on inverted sequence
-    bounds."""
+    one step), the grid is empty instead of throwing on inverted bounds."""
     store = spark.createDataFrame([("p", 1.0)], "path string, stat double").selectExpr(
         "path", "timestamp_seconds(1000) as time", "stat"
     )
@@ -191,3 +193,74 @@ def test_query_metrics_max_datapoints_guard(spark):
             spark, store, cfg, ["m.a"], base, base + year,
             now_s=base + year + 10, max_datapoints=10_000, max_cells=100,
         )
+
+
+#: one path each with a quote, a backslash, a tag and non-ASCII characters
+ODD_PATHS = ['q."x"', "q.b\\s", "cpu;host=a", "temp.zürich"]
+
+
+@pytest.fixture(scope="module")
+def small_engine(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("jvm_grid")
+    eng = Engine(spark, CFG, str(d / "store"), str(d / "idx"), table_format="snapshot")
+    lines = [f"{p} {i + 1}.0 1001" for i, p in enumerate(ODD_PATHS)]
+    lines += ["a.x 1.0 1001", "a.x 3.0 1011", "a.y 2.0 1021"]
+    # a text file, not createDataFrame: a Python-RDD input re-runs its
+    # Python tasks for every ingest job and costs seconds per job
+    (d / "lines.txt").write_text("\n".join(lines) + "\n", encoding="utf-8")
+    eng.ingest_lines(spark.read.text(str(d / "lines.txt")), line_col="value")
+    return eng
+
+
+def _tasks_started(spark, fn):
+    """fn() under a fresh job group -> (its result, tasks its jobs started)."""
+    sc = spark.sparkContext
+    group = f"read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    st = sc.statusTracker()
+    stages = [s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds]
+    return out, sum(st.getStageInfo(s).numTasks for s in stages)
+
+
+@pytest.mark.parametrize("case", ["plans", "odd_paths", "empty_reads"])
+def test_reads_run_in_the_jvm(spark, small_engine, monkeypatch, case):
+    """Reads start no Python worker: the gap-fill grid has no Python-RDD
+    scan, any path text survives the trip into the JVM, and a read with
+    nothing to scan starts no task at all."""
+    eng = small_engine
+    if case == "plans":
+        grids = [query_metrics_df(spark, eng.store, ["a.x", "a.y"], 995, 1035, 10, "average")]
+        collect = qmod.collect_sorted
+
+        def capture(df, keys):
+            grids.append(df)
+            return collect(df, keys)
+
+        monkeypatch.setattr(qmod, "collect_sorted", capture)
+        resp = eng.render_target("movingAverage(a.*,3)", 995, 1035, now_s=2000)
+        assert resp["series"] == {"a.x": [None, 1.0, 2.0, 2.0], "a.y": [None, None, None, 2.0]}
+        assert len(grids) == 2
+        for g in grids:
+            assert "ExistingRDD" not in g._jdf.queryExecution().executedPlan().toString()
+    elif case == "odd_paths":
+        resp = eng.get_metrics(ODD_PATHS, 995, 1015, now_s=2000)
+        assert resp["series"] == {p: [None, float(i + 1)] for i, p in enumerate(ODD_PATHS)}
+        one = eng.get_metrics(ODD_PATHS[1:2], 995, 1015, now_s=2000)
+        assert one["series"] == {ODD_PATHS[1]: [None, 2.0]}
+    else:
+        resp, n = _tasks_started(
+            spark, lambda: eng.render_target("nomatch.*", 995, 1035, now_s=2000)
+        )
+        assert resp["series"] == {} and n == 0
+        far = 10**9
+        rows, n = _tasks_started(
+            spark, lambda: eng.store_for(far, far + 60, ["a.x"]).collect()
+        )
+        assert rows == [] and n == 0
+        # the grid over that pruned read still answers every slot, as null
+        resp = eng.get_metrics(["a.x"], far, far + 30, now_s=far + 60)
+        assert resp["series"] == {"a.x": [None, None, None]}
