@@ -11,15 +11,16 @@ Reference API surface (api/api.go:44-52):
                                          indexmanager.go:294-296; implemented)
 
 Storage:
-  store_dir  — rollup rows, parquet partitioned by (resolution_s, date_bucket)
+  store_dir  — rollup rows in a snapshot table (sources/snapshot.py):
+               parquet partitioned by (resolution_s, date_bucket) under a
+               manifest log, so every write is one atomic commit
   index_dir  — path index (path, depth, tenant, leaf), small parquet
 
 Scale notes:
-  * DELETE /metrics is a PARTITION-SCOPED rewrite: only (resolution_s,
-    date_bucket) partitions that actually contain hits are read and
-    rewritten (dynamic partition overwrite); partitions left empty by the
-    delete are dropped as directories. Nothing touches the rest of a 100 TB
-    store.
+  * DELETE /metrics is one manifest commit that rewrites only the files
+    holding hits; readers keep the snapshot they started on. Nothing
+    touches the rest of a 100 TB store.
+  * Retention is a manifest-only partition drop; bytes go at vacuum.
   * Index maintenance is incremental: new paths are discovered per ingest
     with an anti-join against the existing index and appended.
 """
@@ -33,7 +34,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql.types import StructType
 
 from cassabon_spark.config import RollupConfig
@@ -47,13 +47,14 @@ from cassabon_spark.operators.index import (
     update_indexes,
 )
 from cassabon_spark.operators.rollup import (
+    PARTITION_COLS,
+    retention_cutoff_days,
     rollup_all_tiers,
-    route,
-    sweep_retention,
-    write_rollups,
+    with_date_bucket,
 )
-from cassabon_spark.session import empty_frame
+from cassabon_spark.session import empty_frame, release_checkpoint
 from cassabon_spark.sources.carbon import parse_carbon_lines
+from cassabon_spark.sources.snapshot import SnapshotTable
 
 
 class Engine:
@@ -63,15 +64,12 @@ class Engine:
         config: RollupConfig,
         store_dir: str,
         index_dir: str | None = None,
-        table_format: str = "dirs",
+        table_format: str = "snapshot",
     ):
-        """table_format:
-          'dirs'     — plain partitioned parquet directories (write-then-
-                       rename rewrites; single writer assumed)
-          'snapshot' — manifest-based snapshot table (sources/snapshot.py):
-                       atomic commits, snapshot-isolated readers during
-                       delete/compact, manifest-only retention, time travel
-        """
+        """The store is a manifest-based snapshot table (sources/snapshot.py):
+        atomic commits, snapshot-isolated readers during delete/compact,
+        manifest-only retention, time travel. `table_format` names that one
+        format; any other value raises ValueError."""
         self.spark = spark
         self.config = config
         self.store_dir = store_dir
@@ -83,19 +81,12 @@ class Engine:
         # graphite-web events store (annotations: deploys/incidents) — the
         # reference has no events concept; operators/events.py
         self.events_dir = f"{store_dir}_events"
-        if table_format not in ("dirs", "snapshot"):
+        if table_format != "snapshot":
             raise ValueError(f"unknown table_format {table_format!r}")
-        self.table_format = table_format
-        if table_format == "snapshot":
-            from cassabon_spark.sources.snapshot import SnapshotTable
-
-            self.table = SnapshotTable(spark, store_dir)
-        else:
-            self.table = None
-        # GET /metrics result cache, keyed by snapshot version: sound ONLY
-        # in snapshot mode, where every write (ingest/delete/compact/
-        # retention) bumps the version and thereby invalidates — the 'dirs'
-        # store has no version to key on. The reference has no result cache
+        self.table = SnapshotTable(spark, store_dir)
+        # GET /metrics result cache, keyed by snapshot version: every write
+        # (ingest/delete/compact/retention) bumps the version and thereby
+        # invalidates. The reference has no result cache
         # (every GET re-queries Cassandra, datastore/metricquery.go:86-230);
         # at 100 TB dashboards re-request identical ranges constantly and
         # this short-circuits the whole scan for them.
@@ -106,17 +97,15 @@ class Engine:
         # driver-side copy of the path index (operators.index.load_index),
         # replaced whole whenever the index directory's file listing changes
         self._index_copy: PathIndex | None = None
-        # manifest-pruning effectiveness across store_for reads (snapshot
-        # mode): files the manifest listed vs files actually planned
+        # manifest-pruning effectiveness across store_for reads: files the
+        # manifest listed vs files actually planned
         self.prune_stats = {"files_total": 0, "files_read": 0, "reads": 0}
 
     # ------------------------------------------------------------ store access
 
     @property
     def store(self) -> DataFrame:
-        if self.table is not None:
-            return self.table.read()
-        return self.spark.read.parquet(self.store_dir)
+        return self.table.read()
 
     def store_for(
         self,
@@ -124,16 +113,13 @@ class Engine:
         to_s: int | None = None,
         paths: list[str] | None = None,
     ) -> DataFrame:
-        """Store scan for a time-bounded read. In snapshot mode the file
-        list is cut driver-side from the manifest BEFORE Spark plans: the
-        date_bucket partition range first, then per-file footer min/max on
-        `time` (narrow per file because ingest sortWithinPartitions by
-        (path, time) — the clustering that makes stats skipping bite).
+        """Store scan for a time-bounded read. The file list is cut
+        driver-side from the manifest BEFORE Spark plans: the date_bucket
+        partition range first, then per-file footer min/max on `time`
+        (narrow per file because ingest sortWithinPartitions by (path,
+        time) — the clustering that makes stats skipping bite).
         The callers still apply the exact row filter; pruning only removes
-        files that provably hold no row in [from_s, to_s]. dirs mode falls
-        back to the plain scan (Spark partition-prunes on its own)."""
-        if self.table is None:
-            return self.spark.read.parquet(self.store_dir)
+        files that provably hold no row in [from_s, to_s]."""
         from datetime import datetime, timezone
 
         def _iso(s: int) -> str:
@@ -193,10 +179,7 @@ class Engine:
         return idx
 
     def _has_store(self) -> bool:
-        if self.table is not None:
-            return bool(self.table.snapshot()["files"])
-        p = Path(self.store_dir)
-        return p.exists() and any(p.glob("resolution_s=*"))
+        return bool(self.table.snapshot()["files"])
 
     def _has_index(self) -> bool:
         p = Path(self.index_dir)
@@ -209,18 +192,22 @@ class Engine:
         validate -> route -> all rollup tiers -> partitioned store append;
         index updated incrementally. Returns ingest counters."""
         metrics, obs = parse_carbon_lines(lines, line_col=line_col, observe=True)
-        n_ok = metrics.count()  # also populates the malformed-count observation
-        tiers = rollup_all_tiers(metrics, self.config)
-        if self.table is not None:
-            bucketed = (
-                tiers.withColumn("date_bucket", F.date_format("time", "yyyy-MM-dd"))
-                .repartition("resolution_s", "date_bucket", "path")
-                .sortWithinPartitions("path", "time")
+        # the count, the rollup and the index update each read the parsed
+        # rows: materialise them once so `lines` is read once. The
+        # checkpoint job also fills the malformed-count observation.
+        metrics = metrics.localCheckpoint()
+        try:
+            n_ok = metrics.count()
+            tiers = rollup_all_tiers(metrics, self.config)
+            self.table.append(
+                with_date_bucket(tiers)
+                .repartition(*PARTITION_COLS, "path")
+                .sortWithinPartitions("path", "time"),
+                partition_cols=PARTITION_COLS,
             )
-            self.table.append(bucketed, partition_cols=("resolution_s", "date_bucket"))
-        else:
-            write_rollups(tiers, self.store_dir)
-        update_indexes(self.spark, metrics, self.index_dir, self.tag_index_dir)
+            update_indexes(self.spark, metrics, self.index_dir, self.tag_index_dir)
+        finally:
+            release_checkpoint(metrics)
         return {"received": n_ok, "rejected": obs.get["malformed"]}
 
     def start_streaming_ingest(self, lines_dir: str, checkpoint_dir: str, **kw):
@@ -230,7 +217,6 @@ class Engine:
         from cassabon_spark.streaming.ingest import ingest_stream
 
         kw.setdefault("index_dir", self.index_dir)
-        kw.setdefault("table_format", self.table_format)
         return ingest_stream(
             self.spark, self.config, lines_dir, self.store_dir, checkpoint_dir, **kw
         )
@@ -284,24 +270,13 @@ class Engine:
         replace ALL stored partial rows for each (path, time, resolution_s)
         key with the given finalized rows — one MERGE manifest commit, so a
         correction swaps in consistently (readers never see old+new partials
-        double-merge at read). Snapshot format only: the dirs store would
-        need non-atomic partition rewrites for the same semantics.
+        double-merge at read).
 
         df needs the store schema (path, time, cnt, vsum, vmin, vmax,
         vlast, last_ts, resolution_s); date_bucket derives from time."""
-        if self.table is None:
-            raise NotImplementedError(
-                "upsert_rollups requires table_format='snapshot'"
-            )
-        src = df
-        if "date_bucket" not in src.columns:
-            src = src.withColumn(
-                "date_bucket", F.date_format("time", "yyyy-MM-dd")
-            )
+        src = df if "date_bucket" in df.columns else with_date_bucket(df)
         return self.table.merge(
-            src,
-            keys=["path", "time", "resolution_s"],
-            partition_cols=("resolution_s", "date_bucket"),
+            src, keys=["path", "time", "resolution_s"], partition_cols=PARTITION_COLS
         )
 
     # ------------------------------------------------------------ events API
@@ -374,18 +349,13 @@ class Engine:
             return 0
         alive: set = set()
         if self._has_store():
-            try:
-                alive = {
-                    r["path"]
-                    for r in self.store.filter(F.col("path").isin(candidates))
-                    .select("path")
-                    .distinct()
-                    .collect()
-                }
-            except AnalysisException:
-                # store dir exists but holds no data files (e.g. retention
-                # just emptied every partition) — nothing is alive
-                alive = set()
+            alive = {
+                r["path"]
+                for r in self.store.filter(F.col("path").isin(candidates))
+                .select("path")
+                .distinct()
+                .collect()
+            }
         dead = [p for p in candidates if p not in alive]
         return purge_tag_index_series(self.spark, self.tag_index_dir, dead)
 
@@ -401,41 +371,35 @@ class Engine:
         tag_series = self.tag_index.select("series").distinct()
         dead_df = tag_series
         if self._has_store():
-            try:
-                alive = (
-                    self.store.filter(F.col("path").contains(";"))
-                    .select(F.col("path").alias("series"))
-                    .distinct()
-                )
-                dead_df = tag_series.join(alive, "series", "left_anti")
-                dead_df.count()  # force resolution while the try guards it
-            except AnalysisException:
-                dead_df = tag_series  # store dir present but no data files
+            alive = (
+                self.store.filter(F.col("path").contains(";"))
+                .select(F.col("path").alias("series"))
+                .distinct()
+            )
+            dead_df = tag_series.join(alive, "series", "left_anti")
         from cassabon_spark.operators.tags import purge_tag_index_where
 
         return purge_tag_index_where(self.spark, self.tag_index_dir, dead_df)
 
     def sweep_retention(self, now_s: int) -> list[str]:
-        if self.table is not None:
-            # manifest-only commit: expired partitions leave the snapshot
-            # instantly, bytes are reclaimed later by vacuum (no data IO
-            # on the sweep itself — scales with partition count)
-            from cassabon_spark.operators.rollup import retention_cutoff_days
+        """Retention job: drop expired (resolution_s, date_bucket)
+        partitions, TTL = retention * 1.1 like the reference
+        (metricmanager.go:163-171). A manifest-only commit: expired
+        partitions leave the snapshot at once and vacuum reclaims the bytes
+        later, so the sweep reads no data and scales with partition count.
+        Returns the dropped partitions' directories."""
+        cutoffs = retention_cutoff_days(self.config, now_s)
 
-            cutoffs = retention_cutoff_days(self.config, now_s)
+        def expired(part: dict) -> bool:
+            cutoff = cutoffs.get(int(part["resolution_s"]))
+            return cutoff is not None and part["date_bucket"] < cutoff
 
-            def expired(part: dict) -> bool:
-                cutoff = cutoffs.get(int(part["resolution_s"]))
-                return cutoff is not None and part["date_bucket"] < cutoff
-
-            _, dropped = self.table.drop_partitions(expired)
-            out = [
-                f"{self.store_dir}/resolution_s={d['resolution_s']}/"
-                f"date_bucket={d['date_bucket']}"
-                for d in dropped
-            ]
-        else:
-            out = sweep_retention(self.spark, self.store_dir, self.config, now_s)
+        _, dropped = self.table.drop_partitions(expired)
+        out = [
+            f"{self.store_dir}/resolution_s={d['resolution_s']}/"
+            f"date_bucket={d['date_bucket']}"
+            for d in dropped
+        ]
         if out:
             # tag index must follow the data out (VERDICT r2 gap #1): any
             # tagged series fully expired by this sweep stops resolving
@@ -444,47 +408,30 @@ class Engine:
 
     def compact(self, resolution_s: int | None = None, date_bucket: str | None = None) -> int:
         """Collapse streaming partials to one row per (path, window) — the
-        reference's flush, run as maintenance (streaming.ingest.compact_store).
-        Without arguments compacts every existing partition (fine locally;
-        at scale schedule per recent partition). Returns partitions touched."""
-        from cassabon_spark.streaming.ingest import (
-            compact_snapshot_partition,
-            compact_store,
+        reference's flush (datastore/metricstore.go:85-185), run as
+        maintenance: one rewrite_partition commit per partition. Without
+        arguments compacts every existing partition (fine locally; at scale
+        schedule per recent partition). Returns partitions touched."""
+        from cassabon_spark.streaming.ingest import compact_snapshot_partition
+
+        parts = sorted(
+            {
+                (f["partition"]["resolution_s"], f["partition"]["date_bucket"])
+                for f in self.table.snapshot()["files"]
+            }
         )
-
-        if self.table is not None:
-            parts = sorted(
-                {
-                    (f["partition"]["resolution_s"], f["partition"]["date_bucket"])
-                    for f in self.table.snapshot()["files"]
-                }
-            )
-            touched = 0
-            for res, day in parts:
-                if resolution_s is not None and int(res) != resolution_s:
-                    continue
-                if date_bucket is not None and day != date_bucket:
-                    continue
-                self.table.rewrite_partition(
-                    {"resolution_s": res, "date_bucket": day},
-                    compact_snapshot_partition,
-                    partition_cols=("resolution_s", "date_bucket"),
-                )
-                touched += 1
-            return touched
-
-        root = Path(self.store_dir)
         touched = 0
-        for res_dir in sorted(root.glob("resolution_s=*")):
-            res = int(res_dir.name.split("=", 1)[1])
-            if resolution_s is not None and res != resolution_s:
+        for res, day in parts:
+            if resolution_s is not None and int(res) != resolution_s:
                 continue
-            for date_dir in sorted(res_dir.glob("date_bucket=*")):
-                day = date_dir.name.split("=", 1)[1]
-                if date_bucket is not None and day != date_bucket:
-                    continue
-                compact_store(self.spark, self.store_dir, res, day)
-                touched += 1
+            if date_bucket is not None and day != date_bucket:
+                continue
+            self.table.rewrite_partition(
+                {"resolution_s": res, "date_bucket": day},
+                compact_snapshot_partition,
+                partition_cols=PARTITION_COLS,
+            )
+            touched += 1
         return touched
 
     # ------------------------------------------------------------ read path
@@ -510,21 +457,19 @@ class Engine:
                 "series": {p: [None] * n_slots for p in paths},
             }
         now = int(time.time()) if now_s is None else now_s
-        key = None
-        if self.table is not None:
-            # `now` only picks each path's tier, so the key holds the tiers
-            # it picked: wall-clock requests (HTTP passes no now_s) still hit
-            ordered = sorted(paths)
-            tiers = tuple(
-                self.config.select_tier(self.config.route(p).expression, from_s, now).window_s
-                for p in ordered
-            )
-            key = (tuple(ordered), from_s, to_s, tiers, self.table.version())
-            with self._result_cache_lock:
-                cached = self._result_cache.get(key)
-                self.cache_stats["hits" if cached is not None else "misses"] += 1
-            if cached is not None:
-                return cached
+        # `now` only picks each path's tier, so the key holds the tiers it
+        # picked: wall-clock requests (HTTP passes no now_s) still hit
+        ordered = sorted(paths)
+        tiers = tuple(
+            self.config.select_tier(self.config.route(p).expression, from_s, now).window_s
+            for p in ordered
+        )
+        key = (tuple(ordered), from_s, to_s, tiers, self.table.version())
+        with self._result_cache_lock:
+            cached = self._result_cache.get(key)
+            self.cache_stats["hits" if cached is not None else "misses"] += 1
+        if cached is not None:
+            return cached
         resp = qmod.query_metrics(
             self.spark,
             self.store_for(from_s, to_s, paths),
@@ -536,11 +481,10 @@ class Engine:
             max_datapoints=self.MAX_DATAPOINTS,
             max_cells=self.MAX_RENDER_CELLS,
         )
-        if key is not None:
-            with self._result_cache_lock:
-                if len(self._result_cache) >= self._result_cache_max:
-                    self._result_cache.pop(next(iter(self._result_cache)))
-                self._result_cache[key] = resp
+        with self._result_cache_lock:
+            if len(self._result_cache) >= self._result_cache_max:
+                self._result_cache.pop(next(iter(self._result_cache)))
+            self._result_cache[key] = resp
         return resp
 
     def get_paths(self, glob: str) -> list[dict]:
@@ -822,8 +766,8 @@ class Engine:
         self, paths: list[str], from_s: int, to_s: int, dry_run: bool = True
     ) -> list[dict]:
         """DELETE /metrics (A19): per (path, tier) hit counts; unless
-        dry-run, rewrite ONLY the hit (resolution_s, date_bucket) partitions
-        without the matched rows. Dry-run defaults TRUE like the reference."""
+        dry-run, rewrite ONLY the files holding hits, without the matched
+        rows. Dry-run defaults TRUE like the reference."""
         if not self._has_store():
             return []
         hit = (
@@ -831,10 +775,9 @@ class Engine:
             & (F.unix_timestamp("time") >= from_s)
             & (F.unix_timestamp("time") <= to_s)
         )
-        store = self.store
         report = [
             {"path": r["path"], "resolution_s": r["resolution_s"], "count": r["cnt"]}
-            for r in store.filter(hit)
+            for r in self.store.filter(hit)
             .groupBy("path", "resolution_s")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .orderBy("path", "resolution_s")
@@ -843,52 +786,10 @@ class Engine:
         if dry_run:
             return report
 
-        if self.table is not None:
-            # one atomic commit: only files containing hits are rewritten,
-            # concurrent readers keep the pre-delete snapshot, crash before
-            # commit changes nothing (orphans reclaimed by vacuum)
-            self.table.delete_where(
-                hit, partition_cols=("resolution_s", "date_bucket")
-            )
-            self._gc_tag_series(paths)
-            return report
-
-        touched = (
-            store.filter(hit)
-            .select("resolution_s", F.date_format("time", "yyyy-MM-dd").alias("date_bucket"))
-            .distinct()
-            .collect()
-        )
-        for t in touched:
-            part_dir = (
-                f"{self.store_dir}/resolution_s={t['resolution_s']}/"
-                f"date_bucket={t['date_bucket']}"
-            )
-            part = self.spark.read.parquet(part_dir)
-            remaining = part.filter(
-                ~(
-                    F.col("path").isin(paths)
-                    & (F.unix_timestamp("time") >= from_s)
-                    & (F.unix_timestamp("time") <= to_s)
-                )
-            )
-            if remaining.isEmpty():
-                shutil.rmtree(part_dir)
-                continue
-            # write-then-rename: a cache-materialize-overwrite would corrupt
-            # the partition if the cache were evicted mid-write (the recompute
-            # would scan the directory being overwritten); the tmp dir makes
-            # the rewrite safe at any memory pressure and near-atomic
-            # tmp lives OUTSIDE the store root so partition discovery never
-            # sees a half-written bucket
-            tmp_dir = (
-                f"{self.store_dir}__rewrite_tmp/resolution_s={t['resolution_s']}"
-                f"/date_bucket={t['date_bucket']}"
-            )
-            remaining.write.mode("overwrite").parquet(tmp_dir)
-            shutil.rmtree(part_dir)
-            Path(tmp_dir).rename(part_dir)
-        shutil.rmtree(f"{self.store_dir}__rewrite_tmp", ignore_errors=True)
+        # one atomic commit: only files containing hits are rewritten,
+        # concurrent readers keep the pre-delete snapshot, crash before
+        # commit changes nothing (orphans reclaimed by vacuum)
+        self.table.delete_where(hit, partition_cols=PARTITION_COLS)
         self._gc_tag_series(paths)
         return report
 

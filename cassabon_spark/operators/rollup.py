@@ -32,7 +32,8 @@ Spark-first design decisions:
 Storage schema (FIXTURES.md §1.4, extended for lossless re-agg):
   path STRING, time TIMESTAMP (window CLOSE), stat DOUBLE,
   cnt BIGINT, vsum/vmin/vmax/vlast DOUBLE, last_ts DOUBLE,
-  method STRING, resolution_s BIGINT (partition column)
+  method STRING, resolution_s BIGINT, date_bucket STRING (the two
+  partition columns, PARTITION_COLS)
 """
 
 from __future__ import annotations
@@ -187,52 +188,18 @@ def rollup_all_tiers(metrics: DataFrame, config: RollupConfig) -> DataFrame:
     return finest.unionByName(coarse)
 
 
-def write_rollups(rollups: DataFrame, out_dir: str, mode: str = "append") -> None:
-    """Persist tiers as partitioned parquet (replaces per-retention Cassandra
-    tables, reference datastore/metricmanager.go:149-179).
-
-    Partition layout: resolution_s (tier pruning at read, SURVEY A10) + date
-    bucket (retention sweeps drop whole partitions — Spark has no TTL
-    primitive). Rows are clustered (path, time) within files to emulate the
-    reference's CLUSTERING ORDER (metricmanager.go:158-171): run-length /
-    delta encoding + row-group min/max skipping on path and time.
-    """
-    (
-        rollups.withColumn("date_bucket", F.date_format("time", "yyyy-MM-dd"))
-        .repartition("resolution_s", "date_bucket", "path")
-        .sortWithinPartitions("path", "time")
-        .write.partitionBy("resolution_s", "date_bucket")
-        .mode(mode)
-        .parquet(out_dir)
-    )
+#: The store layout (replaces the reference's per-retention Cassandra tables,
+#: datastore/metricmanager.go:149-179): one partition per (tier, UTC day).
+#: Tier selection prunes `resolution_s` (SURVEY A10); retention drops whole
+#: date buckets (Spark has no TTL primitive). Writers cluster rows by
+#: (path, time) inside files, the reference's CLUSTERING ORDER
+#: (metricmanager.go:158-171), so footer min/max stats skip on both.
+PARTITION_COLS = ("resolution_s", "date_bucket")
 
 
-def sweep_retention(spark, store_dir: str, config: RollupConfig, now_s: int) -> list[str]:
-    """Retention job: drop expired (resolution_s, date_bucket) partitions.
-
-    TTL = retention * 1.1 like the reference (metricmanager.go:163-171).
-    Returns the partition paths removed. Pure metadata operation — no data
-    read — so it scales with partition count, not data size.
-    """
-    import shutil
-    from datetime import datetime, timedelta, timezone
-    from pathlib import Path
-
-    removed: list[str] = []
-    cutoffs = retention_cutoff_days(config, now_s)
-    root = Path(store_dir)
-    if not root.exists():
-        return removed
-    for res_dir in root.glob("resolution_s=*"):
-        res = int(res_dir.name.split("=", 1)[1])
-        cutoff = cutoffs.get(res)
-        if cutoff is None:
-            continue
-        for date_dir in res_dir.glob("date_bucket=*"):
-            if date_dir.name.split("=", 1)[1] < cutoff:
-                shutil.rmtree(date_dir)
-                removed.append(str(date_dir))
-    return removed
+def with_date_bucket(rollups: DataFrame) -> DataFrame:
+    """Add the `date_bucket` partition column: the UTC day of `time`."""
+    return rollups.withColumn("date_bucket", F.date_format("time", "yyyy-MM-dd"))
 
 
 def retention_cutoff_days(config: RollupConfig, now_s: int) -> dict[int, str]:
@@ -241,9 +208,8 @@ def retention_cutoff_days(config: RollupConfig, now_s: int) -> dict[int, str]:
     bucket granularity). The cutoff keeps its time-of-day suffix so the
     lexicographic compare reproduces `bucket_midnight < cutoff_datetime`
     exactly ('2020-01-05' < '2020-01-05 14:00:00'; a cutoff landing on
-    midnight drops the suffix so equality is not a hit). Shared by the
-    directory sweeper above and the snapshot table's manifest-only
-    drop_partitions."""
+    midnight drops the suffix so equality is not a hit). Engine.sweep_retention
+    drops the expired partitions from the snapshot manifest."""
     from datetime import datetime, timedelta, timezone
 
     cutoffs: dict[int, str] = {}

@@ -1473,6 +1473,7 @@ def carbon_streaming(spark, sf_dir):
     from cassabon_spark.config import RollupConfig
     from cassabon_spark.operators.query import query_metrics_df
     from cassabon_spark.queries import EV
+    from cassabon_spark.sources.snapshot import SnapshotTable
     from cassabon_spark.streaming.ingest import ingest_stream
 
     cfg = RollupConfig.from_dict(
@@ -1492,7 +1493,7 @@ def carbon_streaming(spark, sf_dir):
     lines.coalesce(4).write.mode("overwrite").text(drop)
     q = ingest_stream(spark, cfg, drop, out, ckpt, available_now=True, max_files_per_trigger=2)
     _await_or_raise(q, "carbon_streaming_ingest")
-    store = spark.read.parquet(out)
+    store = SnapshotTable(spark, out).read()
     grid = query_metrics_df(
         spark,
         store,

@@ -56,3 +56,9 @@ def empty_frame(spark: SparkSession, schema: StructType | str) -> DataFrame:
     collecting it starts no task. `spark.createDataFrame([], schema)`
     parallelizes the empty list into Python-worker tasks instead."""
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks a `df.localCheckpoint()` pinned: the checkpointed
+    frame's logical plan is the LogicalRDD over them."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)

@@ -1,3 +1,3 @@
-from cassabon_spark.streaming.ingest import ingest_stream, compact_store
+from cassabon_spark.streaming.ingest import ingest_stream
 
-__all__ = ["ingest_stream", "compact_store"]
+__all__ = ["ingest_stream"]

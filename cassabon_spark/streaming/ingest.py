@@ -9,7 +9,7 @@ Spark-first design:
     -> parse/validate (A3, pure Catalyst)
     -> route (A5, when-chain)
     -> PER-MICROBATCH partial aggregation (rollup_finest on the batch)
-    -> append partial tier rows to the partitioned parquet store (A9)
+    -> one txn-keyed append of the partial tier rows to the snapshot store (A9)
     -> new paths from the same rolled-up rows into the path/tag indexes
 
 The microbatch's source is read once: with the index on, the rolled-up rows
@@ -26,15 +26,14 @@ path already re-aggregates on scan — so:
     SURVEY §7 hard-part 4 disappears),
   * no watermark needed for correctness (late rows just append more
     partials; exactly the reference's "accept anything" semantics),
-  * exactly-once in snapshot mode: each append carries the txn
-    (query id from the checkpoint, batch id), so a batch replayed after a
-    crash between the manifest commit and the offset commit is a no-op.
-    Partials are additive, not idempotent: the 'dirs' format has no txn
-    log, so there a replay appends the batch's partials twice
-    (at-least-once).
-A periodic `compact_store` job re-aggregates partials into one row per
-(path, window) to keep read amplification bounded — the analog of the
-reference's flush, but it only ever touches recent date-bucket partitions.
+  * exactly-once: partials are additive, not idempotent, so each append
+    carries the txn (query id from the checkpoint, batch id) and a batch
+    replayed after a crash between the manifest commit and the offset
+    commit is a no-op.
+Compaction re-aggregates partials into one row per (path, window) to keep
+read amplification bounded — the analog of the reference's flush: the
+store's auto-compaction after each batch, or `Engine.compact` as
+maintenance. Either only rewrites the partitions it picks.
 """
 
 from __future__ import annotations
@@ -46,8 +45,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassabon_spark.config import RollupConfig
-from cassabon_spark.operators.rollup import rollup_finest, route
+from cassabon_spark.operators.rollup import (
+    PARTITION_COLS,
+    rollup_finest,
+    route,
+    with_date_bucket,
+)
+from cassabon_spark.session import release_checkpoint
 from cassabon_spark.sources.carbon import parse_carbon_lines
+from cassabon_spark.sources.snapshot import SnapshotTable
 
 
 def _write_batch(
@@ -56,14 +62,12 @@ def _write_batch(
     config: RollupConfig,
     out_dir: str,
     index_dir: str | None = None,
-    table_format: str = "dirs",
-    compact_zorder: bool = True,
     stream_id: str | None = None,
 ):
     """One microbatch: parse -> route -> rollup_finest, then feed the store
     append and (with `index_dir`) the path and tag indexes from the rolled-up
-    rows. `stream_id` keys snapshot appends as (stream_id, batch_id), so a
-    batch replayed after a crash commits nothing twice."""
+    rows. `stream_id` keys the append as (stream_id, batch_id), so a batch
+    replayed after a crash commits nothing twice."""
     metrics, _ = parse_carbon_lines(batch_df, line_col="value")
     finest = rollup_finest(route(metrics, config), config)
     if finest is None:
@@ -80,41 +84,24 @@ def _write_batch(
     if shared:
         finest = finest.localCheckpoint()
     try:
-        bucketed = finest.withColumn(
-            "date_bucket", F.date_format("time", "yyyy-MM-dd")
+        # one atomic manifest commit per microbatch: readers never see a
+        # half-written batch, and a crash before commit leaves only orphan
+        # files for vacuum (sources/snapshot.py)
+        table = SnapshotTable(batch_df.sparkSession, out_dir)
+        table.append(
+            with_date_bucket(finest),
+            partition_cols=PARTITION_COLS,
+            txn=None if stream_id is None else (stream_id, int(batch_id)),
         )
-        if table_format == "snapshot":
-            # one atomic manifest commit per microbatch: readers never see a
-            # half-written batch, and a crash before commit leaves only
-            # orphan files for vacuum (sources/snapshot.py)
-            from cassabon_spark.sources.snapshot import SnapshotTable
-
-            table = SnapshotTable(batch_df.sparkSession, out_dir)
-            table.append(
-                bucketed,
-                partition_cols=("resolution_s", "date_bucket"),
-                txn=None if stream_id is None else (stream_id, int(batch_id)),
-            )
-            # threshold-triggered auto-compaction: partitions accumulating
-            # many small partial files merge back to one row per (path,
-            # window); manifests beyond the retain window are pruned so head
-            # resolution and file listings stay O(1) in commit count. No-op
-            # cost: one manifest read per batch. Default transform z-orders
-            # the rewrite by (path, time) so manifest stats pruning bites on
-            # both read dims (compact_zorder=False keeps the 1-file
-            # path-major sort).
-            table.auto_compact(
-                compact_snapshot_partition_zorder
-                if compact_zorder
-                else compact_snapshot_partition,
-                partition_cols=("resolution_s", "date_bucket"),
-            )
-        else:
-            (
-                bucketed.write.partitionBy("resolution_s", "date_bucket")
-                .mode("append")
-                .parquet(out_dir)
-            )
+        # threshold-triggered auto-compaction: partitions accumulating many
+        # small partial files merge back to one row per (path, window),
+        # z-ordered by (path, time) so manifest stats pruning bites on both
+        # read dims; manifests beyond the retain window are pruned so head
+        # resolution and file listings stay O(1) in commit count. No-op
+        # cost: one manifest read per batch.
+        table.auto_compact(
+            compact_snapshot_partition_zorder, partition_cols=PARTITION_COLS
+        )
         if shared:
             # reference step 8 (SURVEY §3.1): new paths ride the same batch
             # into the index, anti-joined so only first sightings expand
@@ -125,8 +112,7 @@ def _write_batch(
             )
     finally:
         if shared:
-            # the checkpoint's frame is the LogicalRDD over the pinned rows
-            finest._jdf.queryExecution().logical().rdd().unpersist(False)
+            release_checkpoint(finest)
 
 
 def _stream_id(checkpoint_dir: str | None) -> str | None:
@@ -208,10 +194,8 @@ def ingest_stream(
     trigger_seconds: int = 5,
     max_files_per_trigger: int = 64,
     index_dir: str | None = None,
-    table_format: str = "dirs",
     source: str = "files",
     source_options: dict | None = None,
-    compact_zorder: bool = True,
 ):
     """Start the ingest query: lines from `source` (files / kafka / socket,
     see lines_reader) through parse -> route -> rollup -> store.
@@ -227,12 +211,9 @@ def ingest_stream(
     )
 
     def process(df, bid):
-        # snapshot appends are keyed by (query id, batch id); the query id
-        # is only in the checkpoint once the query has started
-        sid = _stream_id(checkpoint_dir) if table_format == "snapshot" else None
-        _write_batch(
-            df, bid, config, out_dir, index_dir, table_format, compact_zorder, sid
-        )
+        # appends are keyed by (query id, batch id); the query id is only in
+        # the checkpoint once the query has started
+        _write_batch(df, bid, config, out_dir, index_dir, _stream_id(checkpoint_dir))
 
     writer = lines.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir
@@ -247,10 +228,9 @@ def ingest_stream(
 def compact_partials(part: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
     """Merge partial rollup rows into one row per (path, window): the
     additive re-aggregation every carried column supports (sum/cnt, min,
-    max, struct-tie-broken last). Shared by the directory compactor below
-    and the snapshot-table compaction paths (engine.compact + the
-    auto-compaction trigger). extra_keys keeps partition columns through
-    the merge when compacting in place."""
+    max, struct-tie-broken last). Shared by the snapshot-table compaction
+    paths (Engine.compact and the auto-compaction trigger). extra_keys
+    keeps partition columns through the merge when compacting in place."""
     return (
         part.groupBy("path", "expression", "method", "time", *extra_keys)
         .agg(
@@ -278,7 +258,7 @@ def compact_snapshot_partition(df: DataFrame) -> DataFrame:
     output file per partition (row-group-friendly for the read path's
     path/time predicates)."""
     return (
-        compact_partials(df, extra_keys=("resolution_s", "date_bucket"))
+        compact_partials(df, extra_keys=PARTITION_COLS)
         .repartition(1)
         .sortWithinPartitions("path", "time")
     )
@@ -308,7 +288,7 @@ def compact_snapshot_partition_zorder(
 
     from cassabon_spark.operators.layout import linear_bucket_expr, zorder_key_expr
 
-    merged = compact_partials(df, extra_keys=("resolution_s", "date_bucket"))
+    merged = compact_partials(df, extra_keys=PARTITION_COLS)
     levels = (1 << bits) - 1
     ranks = (
         merged.select("path")
@@ -339,33 +319,3 @@ def compact_snapshot_partition_zorder(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-
-
-def compact_store(
-    spark: SparkSession, store_dir: str, resolution_s: int, date_bucket: str
-) -> None:
-    """Merge partial rows into one row per (path, window) for one partition —
-    the streaming-era analog of the reference's window flush
-    (datastore/metricstore.go:85-185), run as a periodic batch job.
-
-    Touches exactly one (resolution_s, date_bucket) partition: read, re-agg,
-    overwrite. At scale this is an embarrassingly parallel per-partition job
-    driven by partition listing, not a full-table rewrite.
-    """
-    path = f"{store_dir}/resolution_s={resolution_s}/date_bucket={date_bucket}"
-    part = spark.read.parquet(path)
-    compacted = compact_partials(part)
-    # write-then-rename: materializing via cache and overwriting the source
-    # corrupts the partition if the cache is evicted mid-write (recompute
-    # would scan the directory being overwritten); tmp lives outside the
-    # store root so partition discovery never sees a half-written bucket
-    import shutil
-    from pathlib import Path
-
-    tmp = f"{store_dir}__compact_tmp/resolution_s={resolution_s}/date_bucket={date_bucket}"
-    compacted.repartition(1).sortWithinPartitions("path", "time").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    shutil.rmtree(path)
-    Path(tmp).rename(path)
-    shutil.rmtree(f"{store_dir}__compact_tmp", ignore_errors=True)

@@ -1,8 +1,8 @@
-"""Engine facade in table_format='snapshot' mode: the same reference API
-surface (ingest / GET metrics / DELETE metrics / compact / retention) with
-the manifest-based snapshot store underneath — plus the properties only the
-snapshot format gives: reader isolation across deletes, manifest-only
-retention, time travel, vacuum."""
+"""Engine facade over its snapshot store: the reference API surface
+(ingest / GET metrics / DELETE metrics / compact / retention) with the
+manifest-based snapshot table underneath — plus the properties that table
+gives: reader isolation across deletes, manifest-only retention, time
+travel, vacuum."""
 
 from __future__ import annotations
 
@@ -19,13 +19,7 @@ CFG = RollupConfig.from_dict(
 
 
 def _engine(spark, d):
-    return Engine(
-        spark,
-        CFG,
-        os.path.join(d, "store"),
-        os.path.join(d, "idx"),
-        table_format="snapshot",
-    )
+    return Engine(spark, CFG, os.path.join(d, "store"), os.path.join(d, "idx"))
 
 
 def _lines(spark, rows):
@@ -211,14 +205,11 @@ def test_upsert_rollups_point_correction(spark, tmp_path):
     assert rep["updated"] == 1 and rep["replaced_rows"] == 2
     resp = eng.get_metrics(["svc.api.latency"], 995, 1015, now_s=2000)
     assert resp["series"]["svc.api.latency"] == [None, 5.0]
-    # dirs-format engines refuse (non-atomic there)
+    # the snapshot table is the only store format
     import pytest as _pytest
 
-    from cassabon_spark.engine import Engine as _E
-
-    dirs_eng = _E(spark, CFG, str(tmp_path / "dirs_store"))
-    with _pytest.raises(NotImplementedError):
-        dirs_eng.upsert_rollups(corrected)
+    with _pytest.raises(ValueError, match="unknown table_format"):
+        Engine(spark, CFG, str(tmp_path / "dirs_store"), table_format="dirs")
 
 
 def test_store_for_prunes_files_and_stays_exact(spark, tmp_path):

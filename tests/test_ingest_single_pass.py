@@ -34,7 +34,7 @@ def _files(d: Path) -> int:
 
 
 def test_stream_reads_each_line_once(spark, tmp_path):
-    """Snapshot-mode stream with the index on: the microbatch source is
+    """Stream with the index on: the microbatch source is
     scanned once, each batch stages one store file per partition, and no
     checkpoint blocks outlive the stream."""
     drop = tmp_path / "drop"
@@ -44,10 +44,7 @@ def test_stream_reads_each_line_once(spark, tmp_path):
         (drop / f"f{k}.txt").write_text("\n".join(lines) + "\n")
     sc = spark.sparkContext
     pinned = set(sc._jsc.getPersistentRDDs().keys())
-    eng = Engine(
-        spark, CFG, str(tmp_path / "store"), str(tmp_path / "idx"),
-        table_format="snapshot",
-    )
+    eng = Engine(spark, CFG, str(tmp_path / "store"), str(tmp_path / "idx"))
     q = eng.start_streaming_ingest(
         str(drop), str(tmp_path / "ckpt"), available_now=True,
         max_files_per_trigger=1,
@@ -77,10 +74,10 @@ def test_replayed_batch_commits_once(spark, tmp_path):
         return SnapshotTable(spark, out).read().agg(F.sum("cnt")).first()[0]
 
     for _ in range(2):
-        _write_batch(df, 0, CFG, out, idx, "snapshot", stream_id="q1")
+        _write_batch(df, 0, CFG, out, idx, stream_id="q1")
     assert total_cnt() == len(lines)
     # a recreated checkpoint has a new query id: its batch 0 is not a replay
-    _write_batch(df, 0, CFG, out, table_format="snapshot", stream_id="q2")
+    _write_batch(df, 0, CFG, out, stream_id="q2")
     assert total_cnt() == 2 * len(lines)
 
 
@@ -115,3 +112,21 @@ def test_render_resolves_each_glob_once(spark, tmp_path, monkeypatch):
     resp = eng.render_target("movingAverage(a.*,3)", 1000, 1040, now_s=1100)
     assert calls == ["a.*"]
     assert sorted(resp["series"]) == ["a.b", "a.c"]
+
+
+def test_ingest_lines_reads_input_once(spark, tmp_path):
+    """Batch ingest materialises the parsed lines once: the count, the
+    rollup and the index update do not each re-run the input, and the
+    malformed-line counter stays exact."""
+    sc = spark.sparkContext
+    lines = [f"a.b{i} {i}.0 {1000 + i}" for i in range(6)] + ["bogus"]
+    reads = sc.accumulator(0)
+
+    def tick(line, reads=reads):
+        reads.add(1)
+        return (line,)
+
+    eng = Engine(spark, CFG, str(tmp_path / "store"), str(tmp_path / "idx"))
+    df = spark.createDataFrame(sc.parallelize(lines, 1).map(tick), "line string")
+    assert eng.ingest_lines(df) == {"received": 6, "rejected": 1}
+    assert reads.value == len(lines)

@@ -2,14 +2,11 @@
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pyspark.sql.functions as F
 import pytest
 
 from cassabon_spark.config import RollupConfig
-from cassabon_spark.operators.rollup import rollup_all_tiers, sweep_retention, write_rollups
+from cassabon_spark.engine import Engine
 from cassabon_spark.plans.observability import ingest_observation, plan_report
 
 CFG = RollupConfig.from_dict(
@@ -29,35 +26,26 @@ def test_ingest_observation_counts(spark):
     assert got["nan_values"] == 1
 
 
-def test_retention_sweep_drops_expired_partitions(spark):
+def test_retention_sweep_drops_expired_partitions(spark, tmp_path):
     # data on two days; TTL for the 10s tier = 1h*1.1 -> day-old partition dies
-    day1 = 86400.0  # 1970-01-02
-    day9 = 9 * 86400.0  # 1970-01-10
-    metrics = spark.createDataFrame(
-        [("p", 1.0, day1 + 5), ("p", 2.0, day9 + 5)],
-        "path string, value double, ts double",
-    )
-    with tempfile.TemporaryDirectory() as d:
-        store = os.path.join(d, "store")
-        write_rollups(rollup_all_tiers(metrics, CFG), store)
-        before = {
-            (r, db)
-            for r in os.listdir(store)
-            if r.startswith("resolution_s")
-            for db in os.listdir(os.path.join(store, r))
-        }
-        assert len(before) == 4  # 2 tiers x 2 days
-        removed = sweep_retention(spark, store, CFG, now_s=int(day9 + 7200))
-        # 10s tier (1h retention): day1 partition expired, day9 kept;
-        # 60s tier (1d retention): day1 expired too
-        names = {p.split("/")[-2] + "/" + p.split("/")[-1] for p in removed}
-        assert names == {
-            "resolution_s=10/date_bucket=1970-01-02",
-            "resolution_s=60/date_bucket=1970-01-02",
-        }
-        remaining = spark.read.parquet(store)
-        assert remaining.count() == 2  # day9 rows in both tiers survive
-        assert remaining.filter(F.col("path") == "p").count() == 2
+    day1 = 86400  # 1970-01-02
+    day9 = 9 * 86400  # 1970-01-10
+    (tmp_path / "lines.txt").write_text(f"p 1.0 {day1 + 5}\np 2.0 {day9 + 5}\n")
+    eng = Engine(spark, CFG, str(tmp_path / "store"), str(tmp_path / "idx"))
+    eng.ingest_lines(spark.read.text(str(tmp_path / "lines.txt")), line_col="value")
+    before = {tuple(sorted(f["partition"].items())) for f in eng.table.snapshot()["files"]}
+    assert len(before) == 4  # 2 tiers x 2 days
+    removed = eng.sweep_retention(now_s=day9 + 7200)
+    # 10s tier (1h retention): day1 partition expired, day9 kept;
+    # 60s tier (1d retention): day1 expired too
+    names = {p.split("/")[-2] + "/" + p.split("/")[-1] for p in removed}
+    assert names == {
+        "resolution_s=10/date_bucket=1970-01-02",
+        "resolution_s=60/date_bucket=1970-01-02",
+    }
+    remaining = eng.store
+    assert remaining.count() == 2  # day9 rows in both tiers survive
+    assert remaining.filter(F.col("path") == "p").count() == 2
 
 
 def test_headline_plans_stay_clean(spark, sf_dir):

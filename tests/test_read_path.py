@@ -117,23 +117,22 @@ def test_delete_dry_run_counts_per_tier(spark):
 
 
 def test_store_read_partition_prunes_tier_and_date(spark, tmp_path):
-    """A10 at the plan level: a tier-selected, time-bounded read of the
-    partitioned store must show PartitionFilters on resolution_s AND touch
-    only the matching date buckets — the property that keeps a query
-    against a 100 TB store from listing, let alone reading, cold data."""
-    import os
+    """A10 at the plan level: a time-bounded read plans only the matching
+    date bucket's files (store_for cuts them from the manifest), and a
+    tier-selected read of them shows PartitionFilters on resolution_s AND
+    date_bucket — the property that keeps a query against a 100 TB store
+    from listing, let alone reading, cold data."""
+    day1, day9 = 86400, 9 * 86400
+    (tmp_path / "lines.txt").write_text(f"p 1.0 {day1 + 5}\np 2.0 {day9 + 5}\n")
+    eng = Engine(spark, CFG, str(tmp_path / "store"), str(tmp_path / "idx"))
+    eng.ingest_lines(spark.read.text(str(tmp_path / "lines.txt")), line_col="value")
 
-    from cassabon_spark.operators.rollup import write_rollups
-
-    day1, day9 = 86400.0, 9 * 86400.0
-    metrics = spark.createDataFrame(
-        [("p", 1.0, day1 + 5), ("p", 2.0, day9 + 5)],
-        "path string, value double, ts double",
-    )
-    store_dir = os.path.join(str(tmp_path), "store")
-    write_rollups(rollup_all_tiers(metrics, CFG), store_dir)
-
-    store = spark.read.parquet(store_dir)
+    store = eng.store_for(day9, day9 + 3600, ["p"])
+    # both tiers' day-9 files, none of day 1
+    assert {tuple(f.split("/")[-3:-1]) for f in store.inputFiles()} == {
+        ("resolution_s=10", "date_bucket=1970-01-10"),
+        ("resolution_s=60", "date_bucket=1970-01-10"),
+    }
     q = store.filter(
         (F.col("resolution_s") == 60)
         & (F.col("date_bucket") == "1970-01-10")
@@ -202,11 +201,11 @@ ODD_PATHS = ['q."x"', "q.b\\s", "cpu;host=a", "temp.zürich"]
 @pytest.fixture(scope="module")
 def small_engine(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("jvm_grid")
-    eng = Engine(spark, CFG, str(d / "store"), str(d / "idx"), table_format="snapshot")
+    eng = Engine(spark, CFG, str(d / "store"), str(d / "idx"))
     lines = [f"{p} {i + 1}.0 1001" for i, p in enumerate(ODD_PATHS)]
     lines += ["a.x 1.0 1001", "a.x 3.0 1011", "a.y 2.0 1021"]
-    # a text file, not createDataFrame: a Python-RDD input re-runs its
-    # Python tasks for every ingest job and costs seconds per job
+    # a text file, not createDataFrame: a Python-RDD input starts
+    # Python-worker tasks to read it
     (d / "lines.txt").write_text("\n".join(lines) + "\n", encoding="utf-8")
     eng.ingest_lines(spark.read.text(str(d / "lines.txt")), line_col="value")
     return eng

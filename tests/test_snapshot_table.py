@@ -243,9 +243,8 @@ def test_head_hint_is_o1_and_self_heals(spark, tmp_path):
 
 
 def test_streaming_ingest_auto_compacts(spark, tmp_path):
-    """End-to-end: many tiny microbatches through ingest_stream
-    (table_format='snapshot') leave a bounded per-partition file count and
-    an intact, compacted store."""
+    """End-to-end: many tiny microbatches through ingest_stream leave a
+    bounded per-partition file count and an intact, compacted store."""
     from cassabon_spark.config import RollupConfig
     from cassabon_spark.streaming.ingest import ingest_stream
 
@@ -262,8 +261,7 @@ def test_streaming_ingest_auto_compacts(spark, tmp_path):
         (lines_dir / f"f{i}.txt").write_text(f"m.a 1 {base + i * 10}\n")
         q = ingest_stream(
             spark, cfg, str(lines_dir), out, ck,
-            available_now=True, table_format="snapshot",
-            max_files_per_trigger=1,
+            available_now=True, max_files_per_trigger=1,
         )
         q.awaitTermination()
     t = SnapshotTable(spark, out)
