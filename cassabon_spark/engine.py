@@ -34,7 +34,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from cassabon_spark.config import RollupConfig
 from cassabon_spark.operators import query as qmod
@@ -49,7 +48,7 @@ from cassabon_spark.operators.index import (
 from cassabon_spark.operators.rollup import (
     PARTITION_COLS,
     retention_cutoff_days,
-    rollup_all_tiers,
+    rollup_tiers,
     with_date_bucket,
 )
 from cassabon_spark.session import empty_frame, release_checkpoint
@@ -113,61 +112,14 @@ class Engine:
         to_s: int | None = None,
         paths: list[str] | None = None,
     ) -> DataFrame:
-        """Store scan for a time-bounded read. The file list is cut
-        driver-side from the manifest BEFORE Spark plans: the date_bucket
-        partition range first, then per-file footer min/max on `time`
-        (narrow per file because ingest sortWithinPartitions by (path,
-        time) — the clustering that makes stats skipping bite).
-        The callers still apply the exact row filter; pruning only removes
-        files that provably hold no row in [from_s, to_s]."""
-        from datetime import datetime, timezone
+        """Store scan for a time-bounded read: the latest snapshot's file
+        list, cut driver-side from the manifest before Spark plans
+        (operators.query.pin_store). The callers still apply the exact row
+        filter."""
+        return self._pin(from_s, to_s, paths).frame()
 
-        def _iso(s: int) -> str:
-            return datetime.fromtimestamp(s, tz=timezone.utc).strftime(
-                "%Y-%m-%d %H:%M:%S"
-            )
-
-        part = None
-        if from_s is not None or to_s is not None:
-            f_day = _iso(from_s)[:10] if from_s is not None else None
-            t_day = _iso(to_s)[:10] if to_s is not None else None
-
-            def part(p, _f=f_day, _t=t_day):
-                db = p.get("date_bucket")
-                if db is None:
-                    return True
-                return (_f is None or db >= _f) and (_t is None or db <= _t)
-
-        prune = []
-        if paths and not any(
-            c in p for p in paths for c in ("*", "?", "[", "{")
-        ):
-            # lexicographic path bounds: ingest clusters files by (path,
-            # time), so concrete (glob-resolved) path lists cut files too.
-            # Only sound for CONCRETE names — a glob leaking in ('*' sorts
-            # below alphanumerics) would wrongly prune matching files, so
-            # skip the bounds entirely in that case (conservative).
-            prune.append(("path", ">=", min(paths)))
-            prune.append(("path", "<=", max(paths)))
-        if from_s is not None:
-            prune.append(("time", ">=", _iso(from_s)))
-        if to_s is not None:
-            # +1s then string-compare: file stats carry fractional seconds
-            # ('...12.500000'), and the row filter is unix_timestamp() <= to
-            # which truncates — widen the prune bound so the boundary file
-            # with rows at to_s + fraction is kept, never wrongly skipped
-            prune.append(("time", "<=", _iso(to_s + 1)))
-        v = self.table.version()
-        kept = self.table.files_for(v, part, prune or None)
-        self.prune_stats["files_total"] += len(self.table.snapshot(v)["files"])
-        self.prune_stats["files_read"] += len(kept)
-        self.prune_stats["reads"] += 1
-        if not kept:
-            schema = self.table.snapshot(v).get("schema")
-            if schema is None:
-                raise ValueError(f"snapshot table {self.store_dir} has no commits yet")
-            return empty_frame(self.spark, StructType.fromJson(schema))
-        return self.table.read_files(kept, schema=self.table.snapshot(v).get("schema"))
+    def _pin(self, from_s, to_s, paths, version: int | None = None) -> qmod.StoreRead:
+        return qmod.pin_store(self.table, from_s, to_s, paths, self.prune_stats, version)
 
     @property
     def index(self) -> DataFrame:
@@ -198,13 +150,16 @@ class Engine:
         metrics = metrics.localCheckpoint()
         try:
             n_ok = metrics.count()
-            tiers = rollup_all_tiers(metrics, self.config)
-            self.table.append(
-                with_date_bucket(tiers)
-                .repartition(*PARTITION_COLS, "path")
-                .sortWithinPartitions("path", "time"),
-                partition_cols=PARTITION_COLS,
-            )
+            finest, tiers = rollup_tiers(metrics, self.config)
+            try:
+                self.table.append(
+                    with_date_bucket(tiers)
+                    .repartition(*PARTITION_COLS, "path")
+                    .sortWithinPartitions("path", "time"),
+                    partition_cols=PARTITION_COLS,
+                )
+            finally:
+                release_checkpoint(finest)
             update_indexes(self.spark, metrics, self.index_dir, self.tag_index_dir)
         finally:
             release_checkpoint(metrics)
@@ -457,14 +412,13 @@ class Engine:
                 "series": {p: [None] * n_slots for p in paths},
             }
         now = int(time.time()) if now_s is None else now_s
-        # `now` only picks each path's tier, so the key holds the tiers it
-        # picked: wall-clock requests (HTTP passes no now_s) still hit
-        ordered = sorted(paths)
-        tiers = tuple(
-            self.config.select_tier(self.config.route(p).expression, from_s, now).window_s
-            for p in ordered
+        # `now` only picks each path's tier, so the key holds the plan (tiers,
+        # steps, methods): wall-clock requests (HTTP passes no now_s) still hit
+        fetch = qmod.Fetch.plan(
+            self.config, paths, from_s, to_s, now, self.MAX_DATAPOINTS, self.MAX_RENDER_CELLS
         )
-        key = (tuple(ordered), from_s, to_s, tiers, self.table.version())
+        version = self.table.version()  # one snapshot for the key and the read
+        key = (fetch.key(), from_s, to_s, version)
         with self._result_cache_lock:
             cached = self._result_cache.get(key)
             self.cache_stats["hits" if cached is not None else "misses"] += 1
@@ -472,7 +426,7 @@ class Engine:
             return cached
         resp = qmod.query_metrics(
             self.spark,
-            self.store_for(from_s, to_s, paths),
+            self._pin(from_s, to_s, paths, version),
             self.config,
             paths,
             from_s,
@@ -492,13 +446,10 @@ class Engine:
         the driver-side copy of the index: no Spark job."""
         return self._path_index().glob(glob)
 
-    #: maxDataPoints guard defaults (graphite-web's maxDataPoints): renders
-    #: asking for more than MAX_DATAPOINTS slots per series consolidate to a
-    #: coarser step at FETCH time (bounds the gap-fill spine AND the driver
-    #: collect); a request whose paths x slots grid would still exceed
-    #: MAX_RENDER_CELLS raises instead of OOMing the driver.
-    MAX_DATAPOINTS = 100_000
-    MAX_RENDER_CELLS = 4_000_000
+    #: read guards (operators.query): per-series slots before the fetch step
+    #: coarsens, and the paths x slots cap past which a read raises
+    MAX_DATAPOINTS = qmod.MAX_DATAPOINTS
+    MAX_RENDER_CELLS = qmod.MAX_RENDER_CELLS
 
     def render_target(
         self,
@@ -529,11 +480,7 @@ class Engine:
             target_consolidations,
             target_globs,
         )
-        from cassabon_spark.operators.query import (
-            collect_sorted,
-            normalize_from,
-            query_metrics_df,
-        )
+        from cassabon_spark.operators.query import collect_sorted, normalize_from
 
         node = parse_target(target)
         globs = target_globs(node)
@@ -559,32 +506,14 @@ class Engine:
         ):
             f, t = from_s + offset_s, to_s + offset_s
             if not paths:
-                return empty_frame(self.spark, "path string, slot_s bigint, stat double")
-            d = self.config.route(paths[0])
-            tier = self.config.select_tier(d.expression, f, now)
-            step = tier.window_s
-            slots = max(0, t - f) // step + 1
-            if md and slots > md:
-                step = tier.window_s * -(-slots // md)  # ceil factor
-                slots = max(0, t - f) // step + 1
-            if len(paths) * slots > self.MAX_RENDER_CELLS:
-                raise ValueError(
-                    f"render grid {len(paths)} paths x {slots} slots exceeds "
-                    f"MAX_RENDER_CELLS={self.MAX_RENDER_CELLS}; narrow the "
-                    "glob or time range, or lower max_datapoints"
-                )
-            step_holder.setdefault("step", step)
-            method = method_map[consolidate] if consolidate in method_map else d.method
-            return query_metrics_df(
-                self.spark,
-                self.store_for(f, t, paths),
-                paths,
-                f,
-                t,
-                step,
-                method,
-                resolution_s=tier.window_s,
+                return empty_frame(self.spark, qmod.GRID_SCHEMA)
+            # one grid per glob: every path reads with the first one's route
+            fetch = qmod.Fetch.plan(
+                self.config, paths, f, t, now, md, self.MAX_RENDER_CELLS,
+                method=method_map.get(consolidate), route_as=paths[0],
             )
+            step_holder.setdefault("step", fetch.step)
+            return fetch.frame(self.spark, self._pin(f, t, paths))
 
         leaves: dict[str, list[str]] = {}
 

@@ -12,13 +12,28 @@ Reference lifecycle (datastore/metricquery.go:86-229):
   A15 NaN -> null        metricquery.go:179-183
   A16 multi-path fan-in  metricquery.go:106-225
 
-Spark-first shape: tier selection is driver-side Python over the broadcast
-rollup config; the scan is a partition-pruned parquet read with path/time
-predicates pushed down; merge is ONE hash re-aggregation on (path, slot); the
-spine is built in the JVM (a `range` of slots, each exploding the path list
-shipped as one JSON literal) and left-joined against the (bounded,
-paths x slots sized) aggregate, so a read starts no Python worker. Nothing
-here grows with raw data volume except the pruned scan itself.
+Fetch shape: every engine read goes through one `Fetch` (tier selection
+over the broadcast rollup config, maxDataPoints coarsening, the cells cap)
+and one `StoreRead` (the manifest's file list at ONE pinned snapshot
+version, cut by partition range and footer stats, counted in the engine's
+prune_stats). The helper then picks the executor by the bytes the read
+would scan:
+
+  * under DRIVER_READ_BYTES the files are read on the driver with pyarrow
+    and merge, NaN scrub and spine run in numpy (`arrow_grid`): no Spark
+    job, the way the reference answers from one Cassandra partition per
+    path. GET /metrics answers straight from that grid; /render hands it
+    to `spark.createDataFrame` (a LocalTableScan), so only the graphite
+    function chain runs in Spark.
+  * larger reads keep the Spark plan (`query_metrics_df`): a pruned
+    parquet scan with path/time predicates pushed down, ONE hash
+    re-aggregation on (path, slot), and a spine built in the JVM (a
+    `range` of slots, each exploding the path list shipped as one JSON
+    literal) left-joined to the aggregate, so a read starts no Python
+    worker.
+
+Both executors follow the same A11-A15 rules and a differential test keeps
+them equal. Nothing here grows with raw data volume except the pruned scan.
 
 Documented divergence from the reference: our grid is inclusive of both
 normalFrom and to (range(normalFrom, to + 1, step)); the reference's trailing
@@ -31,11 +46,44 @@ from __future__ import annotations
 
 import json
 import time as _time
+from collections import Counter
+from dataclasses import dataclass
+from datetime import datetime, timezone
+from typing import TYPE_CHECKING
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from cassabon_spark.config import RollupConfig
+from cassabon_spark.session import empty_frame
+
+if TYPE_CHECKING:
+    from cassabon_spark.sources.snapshot import SnapshotTable
+
+#: maxDataPoints guard defaults (graphite-web's maxDataPoints): reads asking
+#: for more than MAX_DATAPOINTS slots per series consolidate to a coarser step
+#: at FETCH time (bounds the gap-fill spine AND the driver collect); a read
+#: whose paths x slots grid would still exceed MAX_RENDER_CELLS raises
+#: instead of OOMing the driver.
+MAX_DATAPOINTS = 100_000
+MAX_RENDER_CELLS = 4_000_000
+#: A read whose pruned file list holds fewer manifest bytes than this runs on
+#: the driver (pyarrow + numpy, no Spark job); larger reads keep the Spark
+#: plan. The same order as Spark's own 10 MiB broadcast threshold: a table
+#: that small is cheaper to move whole than to schedule a job over.
+DRIVER_READ_BYTES = 10 << 20
+
+GRID_SCHEMA = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("slot_s", LongType()),
+        StructField("stat", DoubleType()),
+    ]
+)
 
 
 def normalize_from(from_s: int, step: int) -> int:
@@ -136,9 +184,205 @@ def collect_sorted(df: DataFrame, keys: list[str]) -> list:
     return rows
 
 
+@dataclass(frozen=True)
+class StoreRead:
+    """The files one bounded read scans: the manifest's file list at ONE
+    pinned snapshot version, after partition and footer-stats pruning."""
+
+    table: SnapshotTable
+    files: list
+    schema: dict | None
+
+    @property
+    def on_driver(self) -> bool:
+        """Small enough to read on the driver (under DRIVER_READ_BYTES); an
+        entry with no recorded size counts as large."""
+        return sum(f.get("bytes", DRIVER_READ_BYTES) for f in self.files) < DRIVER_READ_BYTES
+
+    def frame(self) -> DataFrame:
+        """The pinned files as a Spark scan (a task-free empty frame when
+        pruning kept none)."""
+        if self.files:
+            return self.table.read_files(self.files, schema=self.schema)
+        if self.schema is None:
+            raise ValueError(f"snapshot table {self.table.root} has no commits yet")
+        return empty_frame(self.table.spark, StructType.fromJson(self.schema))
+
+
+def _iso(s: int) -> str:
+    return datetime.fromtimestamp(s, tz=timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
+
+
+def pin_store(
+    table: SnapshotTable,
+    from_s: int | None = None,
+    to_s: int | None = None,
+    paths: list[str] | None = None,
+    stats: dict | None = None,
+    version: int | None = None,
+) -> StoreRead:
+    """Pin one snapshot version (the latest unless given) and cut its file
+    list driver-side from the manifest BEFORE anything plans: the
+    date_bucket partition range first, then per-file footer min/max on
+    `time` and `path` (narrow per file because ingest sortWithinPartitions
+    by (path, time) — the clustering that makes stats skipping bite).
+    Readers still apply the exact row filter; pruning only removes files
+    that provably hold no row in [from_s, to_s]. `stats` (the engine's
+    prune_stats) counts files listed vs kept."""
+    part = None
+    if from_s is not None or to_s is not None:
+        f_day = _iso(from_s)[:10] if from_s is not None else None
+        t_day = _iso(to_s)[:10] if to_s is not None else None
+
+        def part(p, _f=f_day, _t=t_day):
+            db = p.get("date_bucket")
+            if db is None:
+                return True
+            return (_f is None or db >= _f) and (_t is None or db <= _t)
+
+    prune = []
+    if paths and not any(c in p for p in paths for c in ("*", "?", "[", "{")):
+        # lexicographic path bounds: ingest clusters files by (path, time),
+        # so concrete (glob-resolved) path lists cut files too. Only sound
+        # for CONCRETE names — a glob leaking in ('*' sorts below
+        # alphanumerics) would wrongly prune matching files, so skip the
+        # bounds entirely in that case (conservative).
+        prune.append(("path", ">=", min(paths)))
+        prune.append(("path", "<=", max(paths)))
+    if from_s is not None:
+        prune.append(("time", ">=", _iso(from_s)))
+    if to_s is not None:
+        # +1s then string-compare: file stats carry fractional seconds
+        # ('...12.500000'), and the row filter is unix_timestamp() <= to
+        # which truncates — widen the prune bound so the boundary file with
+        # rows at to_s + fraction is kept, never wrongly skipped
+        prune.append(("time", "<=", _iso(to_s + 1)))
+    v = table.version() if version is None else version
+    snap = table.snapshot(v)
+    kept = table.files_for(v, part, prune or None)
+    if stats is not None:
+        stats["files_total"] += len(snap["files"])
+        stats["files_read"] += len(kept)
+        stats["reads"] += 1
+    return StoreRead(table, kept, snap.get("schema"))
+
+
+@dataclass(frozen=True)
+class Fetch:
+    """One bounded read, planned once for every engine caller (GET
+    /metrics, its result-cache key, /render's grids): tier selection (A10),
+    maxDataPoints coarsening and the cells cap. `groups` maps (step,
+    method, tier window) to the paths read that way; `run`/`frame` then
+    pick the executor for a StoreRead by its size."""
+
+    groups: dict
+    from_s: int
+    to_s: int
+
+    @classmethod
+    def plan(
+        cls,
+        config: RollupConfig,
+        paths: list[str],
+        from_s: int,
+        to_s: int,
+        now_s: int | None = None,
+        max_datapoints: int | None = None,
+        max_cells: int | None = None,
+        method: str | None = None,
+        route_as: str | None = None,
+    ) -> "Fetch":
+        """Tier and method per path from its route, or from `route_as`'s
+        for all of them (a render glob reads as one grid); `method`
+        overrides the route's (consolidateBy). max_datapoints coarsens a
+        group's step (read-time A14 re-aggregation) when the range would
+        exceed that many slots per series; a grid that still exceeds
+        max_cells raises instead of materializing on the driver."""
+        now_s = int(_time.time()) if now_s is None else now_s
+        span = max(0, to_s - from_s)
+
+        def key_of(p: str) -> tuple[int, str, int]:
+            d = config.route(p)
+            tier = config.select_tier(d.expression, from_s, now_s)
+            step, slots = tier.window_s, span // tier.window_s + 1
+            if max_datapoints and slots > max_datapoints:
+                step = tier.window_s * -(-slots // max_datapoints)  # ceil factor
+            return step, method or d.method, tier.window_s
+
+        groups: dict[tuple[int, str, int], list[str]] = {}
+        if route_as is not None and paths:
+            groups[key_of(route_as)] = list(paths)
+        else:
+            for p in paths:
+                groups.setdefault(key_of(p), []).append(p)
+        cells = sum(len(ps) * (span // k[0] + 1) for k, ps in groups.items())
+        if max_cells and cells > max_cells:
+            raise ValueError(
+                f"read grid of {cells} cells exceeds max_cells={max_cells} "
+                "(MAX_RENDER_CELLS); narrow the paths or time range, or lower "
+                "max_datapoints"
+            )
+        return cls(groups, from_s, to_s)
+
+    @property
+    def step(self) -> int:
+        """The response step. The reference serves ONE step per response
+        (the first path's tier, metricquery.go:102-121); multi-step groups
+        answer with the finest."""
+        return min((k[0] for k in self.groups), default=0)
+
+    def key(self) -> tuple:
+        """Hashable plan identity, for result-cache keys."""
+        return tuple(sorted((k, tuple(sorted(ps))) for k, ps in self.groups.items()))
+
+    def _spark_grid(self, spark, store, key, paths) -> DataFrame:
+        step, method, res = key
+        scan = store.frame() if isinstance(store, StoreRead) else store
+        return query_metrics_df(
+            spark, scan, paths, self.from_s, self.to_s, step, method, resolution_s=res
+        )
+
+    def frame(self, spark: SparkSession, store) -> DataFrame:
+        """The (path, slot_s, stat) grid of a one-group fetch (a render
+        glob). A small StoreRead's grid is built on the driver and handed
+        to Spark as a local relation; anything else runs the Spark plan."""
+        ((key, paths),) = self.groups.items()
+        if isinstance(store, StoreRead) and store.on_driver:
+            return spark.createDataFrame(
+                arrow_grid(store, paths, self.from_s, self.to_s, *key), GRID_SCHEMA
+            )
+        return self._spark_grid(spark, store, key, paths)
+
+    def run(self, spark: SparkSession, store) -> dict:
+        """MetricResponse-shaped dict {"from": normalFrom, "to", "step",
+        "series": {path: [v|None, ...]}} (reference
+        datastore/metricmanager.go:31-36). A small StoreRead is answered on
+        the driver with no Spark job; otherwise each group is one Spark
+        grid, collected (bounded by the cells cap)."""
+        if not self.groups:
+            return {"from": self.from_s, "to": self.to_s, "step": 0, "series": {}}
+        series: dict[str, list] = {}
+        for key, paths in self.groups.items():
+            if isinstance(store, StoreRead) and store.on_driver:
+                g = arrow_grid(store, paths, self.from_s, self.to_s, *key)
+                rows = zip(g.column("path").to_pylist(), g.column("stat").to_pylist())
+            else:
+                grid = self._spark_grid(spark, store, key, paths)
+                rows = ((r["path"], r["stat"]) for r in collect_sorted(grid, ["path", "slot_s"]))
+            for p, v in rows:
+                series.setdefault(p, []).append(v)
+        step = self.step
+        return {
+            "from": normalize_from(self.from_s, step),
+            "to": self.to_s,
+            "step": step,
+            "series": series,
+        }
+
+
 def query_metrics(
     spark: SparkSession,
-    store: DataFrame,
+    store,
     config: RollupConfig,
     paths: list[str],
     from_s: int,
@@ -147,54 +391,132 @@ def query_metrics(
     max_datapoints: int | None = None,
     max_cells: int | None = None,
 ) -> dict:
-    """Full GET /metrics equivalent -> MetricResponse-shaped dict
-    {"from": normalFrom, "to": to, "step": step, "series": {path: [v|None,...]}}
-    (reference datastore/metricmanager.go:31-36).
+    """Full GET /metrics equivalent over `store` (a DataFrame of rollup
+    rows, or a StoreRead): plan the fetch, then run it (see Fetch)."""
+    return Fetch.plan(
+        config, paths, from_s, to_s, now_s, max_datapoints, max_cells
+    ).run(spark, store)
 
-    Tier/step selection per path via the broadcast config (A10); paths that
-    share (step, method) are answered by one DataFrame chain; results are
-    collected (bounded by paths x slots, same as the reference's response).
 
-    max_datapoints coarsens the step (read-time A14 re-aggregation with the
-    path's own method) when the range would exceed that many slots per
-    series — bounding BOTH the spine and the collect. max_cells is the hard
-    guard: a request whose paths x slots grid still exceeds it raises
-    instead of materializing an unbounded response on the driver.
-    """
-    now_s = int(_time.time()) if now_s is None else now_s
-    groups: dict[tuple[int, str, int], list[str]] = {}
-    for p in paths:
-        d = config.route(p)
-        tier = config.select_tier(d.expression, from_s, now_s)
-        grp_step = tier.window_s
-        if max_datapoints:
-            slots = max(0, to_s - from_s) // grp_step + 1
-            if slots > max_datapoints:
-                grp_step = tier.window_s * -(-slots // max_datapoints)  # ceil
-        groups.setdefault((grp_step, d.method, tier.window_s), []).append(p)
-    if not groups:
-        return {"from": from_s, "to": to_s, "step": 0, "series": {}}
-    if max_cells:
-        cells = sum(
-            len(ps) * (max(0, to_s - from_s) // k[0] + 1) for k, ps in groups.items()
-        )
-        if cells > max_cells:
-            raise ValueError(
-                f"metrics grid of {cells} cells exceeds max_cells={max_cells}; "
-                "narrow the paths or time range, or lower max_datapoints"
-            )
-    # The reference serves ONE step per response (the first path's tier,
-    # metricquery.go:102-121); multi-step groups answer with the finest.
-    step = min(k[0] for k in groups)
-    series: dict[str, list] = {}
+_GRID_ARROW = pa.schema([("path", pa.string()), ("slot_s", pa.int64()), ("stat", pa.float64())])
+_UNIT_PER_S = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}
+
+
+def _numpy(col) -> tuple[np.ndarray, np.ndarray]:
+    """(float64 values with nulls as 0, not-null mask) of a numeric column."""
+    ok = pc.is_valid(col).to_numpy(zero_copy_only=False)
+    vals = pc.cast(col.fill_null(0), pa.float64()).to_numpy(zero_copy_only=False)
+    return vals, ok
+
+
+def arrow_grid(
+    store: StoreRead,
+    paths: list[str],
+    from_s: int,
+    to_s: int,
+    step: int,
+    method: str,
+    resolution_s: int | None = None,
+) -> pa.Table:
+    """query_metrics_df's grid, computed on the driver: pyarrow reads the
+    pinned files, numpy does the A11 time filter, A14 merge to the next
+    boundary and per-method re-aggregate, A15 NaN scrub and the A13 dense
+    spine. Same rows (a repeated path repeats its rows, as the spine's
+    explode does), sorted by (path, slot_s).
+
+    Spark's NaN rules, which numpy and Arrow do not share by default: NaN
+    orders greatest, so max([1, NaN]) is NaN, min([1, NaN]) is 1, min([NaN])
+    is NaN, and LAST's (last_ts, stat) tie-break prefers NaN — and any NaN
+    left is scrubbed to null."""
     nfrom = normalize_from(from_s, step)
-    for (grp_step, method, res), grp_paths in groups.items():
-        df = query_metrics_df(
-            spark, store, grp_paths, from_s, to_s, grp_step, method, resolution_s=res
+    names = sorted(set(paths))
+    slots = np.arange(nfrom, to_s + 1, step, dtype=np.int64)
+    n = len(names) * len(slots)
+    stat, ok = np.full(n, np.nan), np.zeros(n, dtype=bool)
+    files = [
+        f
+        for f in store.files
+        if resolution_s is None
+        or int(f["partition"].get("resolution_s", resolution_s)) == resolution_s
+    ]
+    if n and files:
+        cols = {fl["name"] for fl in store.schema["fields"]}
+        carried = {"vsum", "cnt"} <= cols
+        need = ["path", "time", "stat"]
+        if method == "average" and carried:
+            need += ["vsum", "cnt"]
+        if method == "last" and "last_ts" in cols:
+            need.append("last_ts")
+        t = store.table.read_arrow(files, need, pc.field("path").isin(names))
+        if t.column("time").null_count:
+            t = t.filter(pc.is_valid(t.column("time")))
+        time_col = t.column("time")
+        secs = pc.cast(time_col, pa.int64()).to_numpy() // _UNIT_PER_S[time_col.type.unit]
+        slot = -(-secs // step) * step  # A14: ceil to the next boundary
+        keep = (secs >= from_s) & (secs <= to_s) & (slot >= nfrom) & (slot <= to_s)
+        t, secs, slot = t.filter(pa.array(keep)), secs[keep], slot[keep]
+        row = pc.index_in(t.column("path"), value_set=pa.array(names)).to_numpy()
+        cell = row * len(slots) + (slot - nfrom) // step
+        stat, ok = _reaggregate(t, method, carried, cell, secs, n)
+        ok &= ~np.isnan(stat)  # A15
+    idx = np.arange(n)
+    mult = Counter(paths)
+    if len(mult) < len(paths):
+        idx = np.repeat(idx, np.repeat([mult[p] for p in names], len(slots)))
+    width = max(len(slots), 1)
+    return pa.table(
+        [
+            pa.array(names, pa.string()).take(pa.array(idx // width)),
+            pa.array(slots[idx % width]),
+            pa.array(stat[idx], mask=~ok[idx]),
+        ],
+        schema=_GRID_ARROW,
+    )
+
+
+def _reaggregate(t: pa.Table, method: str, carried: bool, cell, secs, n: int):
+    """Per-cell re-aggregate of the scanned tier rows (_rebucket's rules):
+    returns (stat, has-value) arrays over the n grid cells."""
+    if method == "average" and carried:
+        vsum, s_ok = _numpy(t.column("vsum"))
+        cnt, c_ok = _numpy(t.column("cnt"))
+        num = np.bincount(cell, weights=vsum, minlength=n)
+        den = np.bincount(cell, weights=cnt, minlength=n)
+        has = (np.bincount(cell, weights=s_ok, minlength=n) > 0) & (
+            np.bincount(cell, weights=c_ok, minlength=n) > 0
         )
-        for r in collect_sorted(df, ["path", "slot_s"]):
-            series.setdefault(r["path"], []).append(r["stat"])
-    return {"from": nfrom, "to": to_s, "step": step, "series": series}
+        has &= den != 0
+        return num / np.where(has, den, 1.0), has
+    v, v_ok = _numpy(t.column("stat"))
+    has = np.bincount(cell, weights=v_ok, minlength=n) > 0
+    if method in ("average", "sum"):
+        total = np.bincount(cell, weights=v, minlength=n)  # nulls weigh 0
+        if method == "sum":
+            return total, has
+        return total / np.maximum(np.bincount(cell, weights=v_ok, minlength=n), 1), has
+    if method == "min":
+        out = np.full(n, np.nan)
+        np.fmin.at(out, cell[v_ok], v[v_ok])  # fmin skips NaN unless all NaN
+        return out, has
+    if method == "max":
+        out = np.full(n, -np.inf)
+        with np.errstate(invalid="ignore"):
+            np.maximum.at(out, cell[v_ok], v[v_ok])  # maximum propagates NaN
+        return out, has
+    if method == "last":
+        if "last_ts" in t.column_names:
+            order, o_ok = _numpy(t.column("last_ts"))
+        else:
+            order, o_ok = secs.astype(np.float64), np.ones(len(secs), dtype=bool)
+        # max over struct(order, stat): nulls least, NaN greatest (np sorts
+        # NaN last); the last row of each cell wins
+        srt = np.lexsort((v, v_ok, order, o_ok, cell))
+        c = cell[srt]
+        win = srt[np.r_[c[1:] != c[:-1], True]] if len(c) else srt
+        out, has = np.full(n, np.nan), np.zeros(n, dtype=bool)
+        out[cell[win]], has[cell[win]] = v[win], v_ok[win]
+        return out, has
+    raise ValueError(f"unknown method {method!r}")
 
 
 def delete_metrics(

@@ -162,7 +162,16 @@ def rollup_coarser(finest: DataFrame, config: RollupConfig) -> DataFrame:
 
 
 def rollup_all_tiers(metrics: DataFrame, config: RollupConfig) -> DataFrame:
-    """route -> finest agg -> coarse re-agg; union of all tiers (A8).
+    """route -> finest agg -> coarse re-agg; union of all tiers (A8). See
+    rollup_tiers; its finest-tier checkpoint stays until Spark's cleaner
+    drops it."""
+    return rollup_tiers(metrics, config)[1]
+
+
+def rollup_tiers(metrics: DataFrame, config: RollupConfig) -> tuple[DataFrame, DataFrame]:
+    """(finest, all tiers): the union of all tiers, plus the checkpointed
+    finest tier it reads, so a caller can release its blocks
+    (session.release_checkpoint) once the union is written.
 
     finest feeds BOTH union branches and Catalyst does not reuse the
     aggregation subtree across them (verified: the uncached plan carries 2
@@ -184,8 +193,7 @@ def rollup_all_tiers(metrics: DataFrame, config: RollupConfig) -> DataFrame:
     """
     routed = route(metrics, config)
     finest = rollup_finest(routed, config).localCheckpoint()
-    coarse = rollup_coarser(finest, config)
-    return finest.unionByName(coarse)
+    return finest, finest.unionByName(rollup_coarser(finest, config))
 
 
 #: The store layout (replaces the reference's per-retention Cassandra tables,

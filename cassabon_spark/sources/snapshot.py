@@ -583,6 +583,17 @@ class SnapshotTable:
             out = out.unionByName(p)
         return out
 
+    def read_arrow(self, files: list[dict], columns: list[str], filter=None):
+        """Read an explicit file list on the driver with pyarrow: no Spark
+        job. Only columns stored IN the data files are readable (partition
+        values live in the manifest entries); `filter` is a
+        pyarrow.dataset expression, pushed to row-group stats. For bounded
+        reads: the caller caps the bytes."""
+        import pyarrow.dataset as ds
+
+        paths = [self._abs_entry(f) for f in files]
+        return ds.dataset(paths, format="parquet").to_table(columns=columns, filter=filter)
+
     def append(
         self,
         df: DataFrame,

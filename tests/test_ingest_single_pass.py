@@ -130,3 +130,20 @@ def test_ingest_lines_reads_input_once(spark, tmp_path):
     df = spark.createDataFrame(sc.parallelize(lines, 1).map(tick), "line string")
     assert eng.ingest_lines(df) == {"received": 6, "rejected": 1}
     assert reads.value == len(lines)
+
+
+def test_ingest_releases_its_checkpoints(spark, tmp_path):
+    """Neither the parsed rows nor the finest tier that feeds the coarser
+    tiers stays persisted after an ingest: the persistent-RDD count is flat
+    across ingests (it grew by one per call while the finest tier's
+    checkpoint was never released)."""
+    src = tmp_path / "lines.txt"
+    src.write_text("\n".join(f"a.b{i} {i}.0 {1000 + i}" for i in range(6)) + "\n")
+    eng = Engine(spark, CFG, str(tmp_path / "store"), str(tmp_path / "idx"))
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    sizes = []
+    for _ in range(3):
+        eng.ingest_lines(spark.read.text(str(src)), line_col="value")
+        sizes.append(rdds().size())
+    assert sizes == [before] * 3
