@@ -424,17 +424,7 @@ class Engine:
             self.cache_stats["hits" if cached is not None else "misses"] += 1
         if cached is not None:
             return cached
-        resp = qmod.query_metrics(
-            self.spark,
-            self._pin(from_s, to_s, paths, version),
-            self.config,
-            paths,
-            from_s,
-            to_s,
-            now_s=now,
-            max_datapoints=self.MAX_DATAPOINTS,
-            max_cells=self.MAX_RENDER_CELLS,
-        )
+        resp = fetch.run(self.spark, self._pin(from_s, to_s, paths, version))
         with self._result_cache_lock:
             if len(self._result_cache) >= self._result_cache_max:
                 self._result_cache.pop(next(iter(self._result_cache)))
@@ -446,10 +436,13 @@ class Engine:
         the driver-side copy of the index: no Spark job."""
         return self._path_index().glob(glob)
 
-    #: read guards (operators.query): per-series slots before the fetch step
-    #: coarsens, and the paths x slots cap past which a read raises
-    MAX_DATAPOINTS = qmod.MAX_DATAPOINTS
-    MAX_RENDER_CELLS = qmod.MAX_RENDER_CELLS
+    #: maxDataPoints guard defaults (graphite-web's maxDataPoints): reads
+    #: asking for more than MAX_DATAPOINTS slots per series consolidate to a
+    #: coarser step at FETCH time (bounds the gap-fill spine AND the driver
+    #: grid); a read whose paths x slots grid would still exceed
+    #: MAX_RENDER_CELLS raises instead of OOMing the driver.
+    MAX_DATAPOINTS = 100_000
+    MAX_RENDER_CELLS = 4_000_000
 
     def render_target(
         self,

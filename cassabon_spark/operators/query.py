@@ -16,24 +16,24 @@ Fetch shape: every engine read goes through one `Fetch` (tier selection
 over the broadcast rollup config, maxDataPoints coarsening, the cells cap)
 and one `StoreRead` (the manifest's file list at ONE pinned snapshot
 version, cut by partition range and footer stats, counted in the engine's
-prune_stats). The helper then picks the executor by the bytes the read
-would scan:
+prune_stats). A StoreRead is answered on the driver (`arrow_grid`): pyarrow
+scans the kept files batch by batch and numpy folds each batch into the
+grid (merge, NaN scrub, spine), so a read runs no Spark job — the way the
+reference answers from one Cassandra partition per path — and holds one
+batch plus the cells-capped grid in memory. GET /metrics answers straight
+from that grid; /render hands it to `spark.createDataFrame` (a
+LocalTableScan), so only the graphite function chain runs in Spark.
+Measured against the Spark plan on 0.5-142 MiB of kept files
+(tools/driver_read_sizes.py), the driver was faster at every size.
 
-  * under DRIVER_READ_BYTES the files are read on the driver with pyarrow
-    and merge, NaN scrub and spine run in numpy (`arrow_grid`): no Spark
-    job, the way the reference answers from one Cassandra partition per
-    path. GET /metrics answers straight from that grid; /render hands it
-    to `spark.createDataFrame` (a LocalTableScan), so only the graphite
-    function chain runs in Spark.
-  * larger reads keep the Spark plan (`query_metrics_df`): a pruned
-    parquet scan with path/time predicates pushed down, ONE hash
-    re-aggregation on (path, slot), and a spine built in the JVM (a
-    `range` of slots, each exploding the path list shipped as one JSON
-    literal) left-joined to the aggregate, so a read starts no Python
-    worker.
-
-Both executors follow the same A11-A15 rules and a differential test keeps
-them equal. Nothing here grows with raw data volume except the pruned scan.
+`query_metrics_df` is the Spark form of the same read, for DataFrame
+stores (the query registry, the oracle, analytics, and the reference the
+driver executor is tested against): a pruned parquet scan with path/time
+predicates pushed down, ONE hash re-aggregation on (path, slot), and a
+spine built in the JVM (a `range` of slots, each exploding the path list
+shipped as one JSON literal) left-joined to the aggregate, so a read starts
+no Python worker. Both follow the same A11-A15 rules and a differential
+test keeps them equal.
 
 Documented divergence from the reference: our grid is inclusive of both
 normalFrom and to (range(normalFrom, to + 1, step)); the reference's trailing
@@ -63,19 +63,6 @@ from cassabon_spark.session import empty_frame
 
 if TYPE_CHECKING:
     from cassabon_spark.sources.snapshot import SnapshotTable
-
-#: maxDataPoints guard defaults (graphite-web's maxDataPoints): reads asking
-#: for more than MAX_DATAPOINTS slots per series consolidate to a coarser step
-#: at FETCH time (bounds the gap-fill spine AND the driver collect); a read
-#: whose paths x slots grid would still exceed MAX_RENDER_CELLS raises
-#: instead of OOMing the driver.
-MAX_DATAPOINTS = 100_000
-MAX_RENDER_CELLS = 4_000_000
-#: A read whose pruned file list holds fewer manifest bytes than this runs on
-#: the driver (pyarrow + numpy, no Spark job); larger reads keep the Spark
-#: plan. The same order as Spark's own 10 MiB broadcast threshold: a table
-#: that small is cheaper to move whole than to schedule a job over.
-DRIVER_READ_BYTES = 10 << 20
 
 GRID_SCHEMA = StructType(
     [
@@ -193,12 +180,6 @@ class StoreRead:
     files: list
     schema: dict | None
 
-    @property
-    def on_driver(self) -> bool:
-        """Small enough to read on the driver (under DRIVER_READ_BYTES); an
-        entry with no recorded size counts as large."""
-        return sum(f.get("bytes", DRIVER_READ_BYTES) for f in self.files) < DRIVER_READ_BYTES
-
     def frame(self) -> DataFrame:
         """The pinned files as a Spark scan (a task-free empty frame when
         pruning kept none)."""
@@ -272,8 +253,8 @@ class Fetch:
     """One bounded read, planned once for every engine caller (GET
     /metrics, its result-cache key, /render's grids): tier selection (A10),
     maxDataPoints coarsening and the cells cap. `groups` maps (step,
-    method, tier window) to the paths read that way; `run`/`frame` then
-    pick the executor for a StoreRead by its size."""
+    method, tier window) to the paths read that way; `run`/`frame` answer
+    a StoreRead on the driver and a DataFrame store with the Spark plan."""
 
     groups: dict
     from_s: int
@@ -344,10 +325,10 @@ class Fetch:
 
     def frame(self, spark: SparkSession, store) -> DataFrame:
         """The (path, slot_s, stat) grid of a one-group fetch (a render
-        glob). A small StoreRead's grid is built on the driver and handed
-        to Spark as a local relation; anything else runs the Spark plan."""
+        glob). A StoreRead's grid is built on the driver and handed to
+        Spark as a local relation; a DataFrame store runs the Spark plan."""
         ((key, paths),) = self.groups.items()
-        if isinstance(store, StoreRead) and store.on_driver:
+        if isinstance(store, StoreRead):
             return spark.createDataFrame(
                 arrow_grid(store, paths, self.from_s, self.to_s, *key), GRID_SCHEMA
             )
@@ -356,14 +337,14 @@ class Fetch:
     def run(self, spark: SparkSession, store) -> dict:
         """MetricResponse-shaped dict {"from": normalFrom, "to", "step",
         "series": {path: [v|None, ...]}} (reference
-        datastore/metricmanager.go:31-36). A small StoreRead is answered on
-        the driver with no Spark job; otherwise each group is one Spark
-        grid, collected (bounded by the cells cap)."""
+        datastore/metricmanager.go:31-36). A StoreRead is answered on the
+        driver with no Spark job; over a DataFrame store each group is one
+        Spark grid, collected (bounded by the cells cap)."""
         if not self.groups:
             return {"from": self.from_s, "to": self.to_s, "step": 0, "series": {}}
         series: dict[str, list] = {}
         for key, paths in self.groups.items():
-            if isinstance(store, StoreRead) and store.on_driver:
+            if isinstance(store, StoreRead):
                 g = arrow_grid(store, paths, self.from_s, self.to_s, *key)
                 rows = zip(g.column("path").to_pylist(), g.column("stat").to_pylist())
             else:
@@ -400,6 +381,14 @@ def query_metrics(
 
 _GRID_ARROW = pa.schema([("path", pa.string()), ("slot_s", pa.int64()), ("stat", pa.float64())])
 _UNIT_PER_S = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}
+#: the stored columns each method's re-aggregate reads (rollup.py's schema)
+_COLUMNS_BY_METHOD = {
+    "average": ["vsum", "cnt"],
+    "sum": ["stat"],
+    "min": ["stat"],
+    "max": ["stat"],
+    "last": ["stat", "last_ts"],
+}
 
 
 def _numpy(col) -> tuple[np.ndarray, np.ndarray]:
@@ -418,21 +407,17 @@ def arrow_grid(
     method: str,
     resolution_s: int | None = None,
 ) -> pa.Table:
-    """query_metrics_df's grid, computed on the driver: pyarrow reads the
-    pinned files, numpy does the A11 time filter, A14 merge to the next
-    boundary and per-method re-aggregate, A15 NaN scrub and the A13 dense
-    spine. Same rows (a repeated path repeats its rows, as the spine's
-    explode does), sorted by (path, slot_s).
-
-    Spark's NaN rules, which numpy and Arrow do not share by default: NaN
-    orders greatest, so max([1, NaN]) is NaN, min([1, NaN]) is 1, min([NaN])
-    is NaN, and LAST's (last_ts, stat) tie-break prefers NaN — and any NaN
-    left is scrubbed to null."""
+    """query_metrics_df's grid, computed on the driver: pyarrow scans the
+    pinned files batch by batch, and numpy does the A11 time filter, A14
+    merge to the next boundary and per-method re-aggregate (folded into the
+    grid one batch at a time, so memory is one batch plus the grid), A15
+    NaN scrub and the A13 dense spine. Same rows (a repeated path repeats
+    its rows, as the spine's explode does), sorted by (path, slot_s)."""
     nfrom = normalize_from(from_s, step)
     names = sorted(set(paths))
     slots = np.arange(nfrom, to_s + 1, step, dtype=np.int64)
     n = len(names) * len(slots)
-    stat, ok = np.full(n, np.nan), np.zeros(n, dtype=bool)
+    fold = _Fold(method, n)
     files = [
         f
         for f in store.files
@@ -440,25 +425,20 @@ def arrow_grid(
         or int(f["partition"].get("resolution_s", resolution_s)) == resolution_s
     ]
     if n and files:
-        cols = {fl["name"] for fl in store.schema["fields"]}
-        carried = {"vsum", "cnt"} <= cols
-        need = ["path", "time", "stat"]
-        if method == "average" and carried:
-            need += ["vsum", "cnt"]
-        if method == "last" and "last_ts" in cols:
-            need.append("last_ts")
-        t = store.table.read_arrow(files, need, pc.field("path").isin(names))
-        if t.column("time").null_count:
-            t = t.filter(pc.is_valid(t.column("time")))
-        time_col = t.column("time")
-        secs = pc.cast(time_col, pa.int64()).to_numpy() // _UNIT_PER_S[time_col.type.unit]
-        slot = -(-secs // step) * step  # A14: ceil to the next boundary
-        keep = (secs >= from_s) & (secs <= to_s) & (slot >= nfrom) & (slot <= to_s)
-        t, secs, slot = t.filter(pa.array(keep)), secs[keep], slot[keep]
-        row = pc.index_in(t.column("path"), value_set=pa.array(names)).to_numpy()
-        cell = row * len(slots) + (slot - nfrom) // step
-        stat, ok = _reaggregate(t, method, carried, cell, secs, n)
-        ok &= ~np.isnan(stat)  # A15
+        value_set = pa.array(names)
+        need = ["path", "time"] + _COLUMNS_BY_METHOD[method]
+        for b in store.table.scan_arrow(files, need, pc.field("path").isin(names)):
+            time_col = b.column("time")
+            secs = pc.cast(time_col, pa.int64()).to_numpy() // _UNIT_PER_S[time_col.type.unit]
+            slot = -(-secs // step) * step  # A14: ceil to the next boundary
+            keep = (secs >= from_s) & (secs <= to_s) & (slot >= nfrom) & (slot <= to_s)
+            if not keep.any():
+                continue
+            b, slot = b.filter(pa.array(keep)), slot[keep]
+            row = pc.index_in(b.column("path"), value_set=value_set).to_numpy()
+            fold.add(b, row * len(slots) + (slot - nfrom) // step)
+    stat, ok = fold.result()
+    ok &= ~np.isnan(stat)  # A15
     idx = np.arange(n)
     mult = Counter(paths)
     if len(mult) < len(paths):
@@ -474,49 +454,95 @@ def arrow_grid(
     )
 
 
-def _reaggregate(t: pa.Table, method: str, carried: bool, cell, secs, n: int):
-    """Per-cell re-aggregate of the scanned tier rows (_rebucket's rules):
-    returns (stat, has-value) arrays over the n grid cells."""
-    if method == "average" and carried:
-        vsum, s_ok = _numpy(t.column("vsum"))
-        cnt, c_ok = _numpy(t.column("cnt"))
-        num = np.bincount(cell, weights=vsum, minlength=n)
-        den = np.bincount(cell, weights=cnt, minlength=n)
-        has = (np.bincount(cell, weights=s_ok, minlength=n) > 0) & (
-            np.bincount(cell, weights=c_ok, minlength=n) > 0
-        )
-        has &= den != 0
-        return num / np.where(has, den, 1.0), has
-    v, v_ok = _numpy(t.column("stat"))
-    has = np.bincount(cell, weights=v_ok, minlength=n) > 0
-    if method in ("average", "sum"):
-        total = np.bincount(cell, weights=v, minlength=n)  # nulls weigh 0
-        if method == "sum":
-            return total, has
-        return total / np.maximum(np.bincount(cell, weights=v_ok, minlength=n), 1), has
-    if method == "min":
-        out = np.full(n, np.nan)
-        np.fmin.at(out, cell[v_ok], v[v_ok])  # fmin skips NaN unless all NaN
-        return out, has
-    if method == "max":
-        out = np.full(n, -np.inf)
-        with np.errstate(invalid="ignore"):
-            np.maximum.at(out, cell[v_ok], v[v_ok])  # maximum propagates NaN
-        return out, has
-    if method == "last":
-        if "last_ts" in t.column_names:
-            order, o_ok = _numpy(t.column("last_ts"))
+def _add_at(acc: np.ndarray, cell: np.ndarray, weights: np.ndarray) -> None:
+    """acc[cell] += weights, summing repeats: a bincount over the batch's
+    own cell span (files are clustered by (path, time), so it is narrow)."""
+    lo = cell.min()
+    part = np.bincount(cell - lo, weights=weights)
+    acc[lo : lo + len(part)] += part
+
+
+def _last_key(order, o_ok, v, v_ok) -> list[np.ndarray]:
+    """LAST's max_by(stat, struct(last_ts, stat)) order as plain-comparable
+    keys, most significant first: nulls least and NaN greatest, as Spark
+    orders doubles."""
+    o_nan, v_nan = np.isnan(order), np.isnan(v)
+    return [o_ok, o_nan, np.where(o_nan, 0.0, order), v_ok, v_nan, np.where(v_nan, 0.0, v)]
+
+
+class _Fold:
+    """Per-cell re-aggregate of the scanned tier rows, with _rebucket's
+    rules over an engine store (every row carries vsum, cnt and last_ts),
+    folded one record batch at a time into arrays over the n grid cells.
+
+    Spark's NaN rules, which numpy does not share by default: NaN orders
+    greatest, so max([1, NaN]) is NaN, min([1, NaN]) is 1, min([NaN]) is
+    NaN, and LAST's (last_ts, stat) tie-break prefers NaN — and any NaN
+    left is scrubbed to null by the caller."""
+
+    def __init__(self, method: str, n: int):
+        if method not in _COLUMNS_BY_METHOD:
+            raise ValueError(f"unknown method {method!r}")
+        self.method = method
+        self.seen = np.zeros(n)  # rows with a non-null value, per cell
+        if method == "average":
+            self.num, self.den, self.seen_cnt = np.zeros(n), np.zeros(n), np.zeros(n)
+        elif method == "sum":
+            self.out = np.zeros(n)
+        elif method == "min":
+            self.out = np.full(n, np.nan)
+        elif method == "max":
+            self.out = np.full(n, -np.inf)
+        else:  # last: the winning row's key per cell; `won` marks cells with one
+            self.key = _last_key(np.zeros(n), np.zeros(n, bool), np.zeros(n), np.zeros(n, bool))
+            self.won = np.zeros(n, bool)
+
+    def add(self, b: pa.RecordBatch, cell: np.ndarray) -> None:
+        if self.method == "average":
+            vsum, s_ok = _numpy(b.column("vsum"))
+            cnt, c_ok = _numpy(b.column("cnt"))
+            _add_at(self.num, cell, vsum)
+            _add_at(self.den, cell, cnt)
+            _add_at(self.seen, cell, s_ok)
+            _add_at(self.seen_cnt, cell, c_ok)
+            return
+        v, v_ok = _numpy(b.column("stat"))
+        if self.method != "last":
+            _add_at(self.seen, cell, v_ok)
+        if self.method == "sum":
+            _add_at(self.out, cell, v)  # nulls weigh 0
+        elif self.method == "min":
+            np.fmin.at(self.out, cell[v_ok], v[v_ok])  # fmin skips NaN unless all NaN
+        elif self.method == "max":
+            with np.errstate(invalid="ignore"):
+                np.maximum.at(self.out, cell[v_ok], v[v_ok])  # maximum propagates NaN
         else:
-            order, o_ok = secs.astype(np.float64), np.ones(len(secs), dtype=bool)
-        # max over struct(order, stat): nulls least, NaN greatest (np sorts
-        # NaN last); the last row of each cell wins
-        srt = np.lexsort((v, v_ok, order, o_ok, cell))
-        c = cell[srt]
-        win = srt[np.r_[c[1:] != c[:-1], True]] if len(c) else srt
-        out, has = np.full(n, np.nan), np.zeros(n, dtype=bool)
-        out[cell[win]], has[cell[win]] = v[win], v_ok[win]
-        return out, has
-    raise ValueError(f"unknown method {method!r}")
+            order, o_ok = _numpy(b.column("last_ts"))
+            key = _last_key(order, o_ok, v, v_ok)
+            # the batch's winner per cell: the last row of each cell sorted
+            # by key, then kept where it beats the cell's winner so far
+            srt = np.lexsort(key[::-1] + [cell])
+            c = cell[srt]
+            win = srt[np.r_[c[1:] != c[:-1], True]]
+            cells = cell[win]
+            gt, eq = ~self.won[cells], self.won[cells]
+            for new, old in zip(key, self.key):
+                gt |= eq & (new[win] > old[cells])
+                eq &= new[win] == old[cells]
+            for new, old in zip(key, self.key):
+                old[cells[gt]] = new[win[gt]]
+            self.won[cells[gt]] = True
+
+    def result(self) -> tuple[np.ndarray, np.ndarray]:
+        """(stat, has-value) over the grid cells."""
+        has = self.seen > 0
+        if self.method == "average":
+            has &= (self.seen_cnt > 0) & (self.den != 0)
+            return self.num / np.where(has, self.den, 1.0), has
+        if self.method == "last":
+            v_ok, v_nan, v = self.key[3:]
+            return np.where(v_nan, np.nan, v), self.won & v_ok
+        return self.out, has
 
 
 def delete_metrics(

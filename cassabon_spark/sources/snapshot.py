@@ -583,16 +583,21 @@ class SnapshotTable:
             out = out.unionByName(p)
         return out
 
-    def read_arrow(self, files: list[dict], columns: list[str], filter=None):
-        """Read an explicit file list on the driver with pyarrow: no Spark
-        job. Only columns stored IN the data files are readable (partition
-        values live in the manifest entries); `filter` is a
-        pyarrow.dataset expression, pushed to row-group stats. For bounded
-        reads: the caller caps the bytes."""
+    def scan_arrow(self, files: list[dict], columns: list[str], filter=None):
+        """Scan an explicit file list on the driver with pyarrow, one record
+        batch at a time: no Spark job. Only columns stored IN the data files
+        are readable (partition values live in the manifest entries);
+        `filter` is a pyarrow.dataset expression, pushed to row-group stats.
+        Files are scanned one after another: a whole-dataset scan reads
+        ahead of a slow consumer without bound (pyarrow 16), so its memory
+        grew with the files read; one file's batches bound it."""
         import pyarrow.dataset as ds
 
-        paths = [self._abs_entry(f) for f in files]
-        return ds.dataset(paths, format="parquet").to_table(columns=columns, filter=filter)
+        dataset = ds.dataset([self._abs_entry(f) for f in files], format="parquet")
+        for frag in dataset.get_fragments():
+            yield from frag.to_batches(
+                schema=dataset.schema, columns=columns, filter=filter
+            )
 
     def append(
         self,

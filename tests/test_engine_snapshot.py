@@ -114,13 +114,13 @@ def test_snapshot_result_cache_hits_and_version_invalidation(spark, tmp_path, mo
     from cassabon_spark.operators import query as qmod
 
     calls = {"n": 0}
-    real = qmod.query_metrics
+    real = qmod.Fetch.run
 
     def counting(*a, **kw):
         calls["n"] += 1
         return real(*a, **kw)
 
-    monkeypatch.setattr(qmod, "query_metrics", counting)
+    monkeypatch.setattr(qmod.Fetch, "run", counting)
 
     r1 = eng.get_metrics(["c.x"], 995, 1015, now_s=2000)
     r2 = eng.get_metrics(["c.x"], 995, 1015, now_s=2000)

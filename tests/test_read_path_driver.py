@@ -1,6 +1,6 @@
 """The driver-side read executor (operators.query.arrow_grid) against the
 Spark plan (query_metrics_df): same grid for every method, NaN rule, step
-and bound; the engine answers the same through either; and a small read
+and bound; the engine answers the same through either; and a read
 runs no Spark job for /metrics and only the function chain's for /render."""
 
 from __future__ import annotations
@@ -121,7 +121,10 @@ TARGETS = [
 ]
 
 
-def test_byte_bound_zero_answers_the_same_through_spark(spark, engine, monkeypatch):
+def test_engine_answers_the_same_through_the_spark_plan(spark, engine, monkeypatch):
+    """Fetch runs the Spark plan (query_metrics_df) over a DataFrame store:
+    hand the engine's reads their pinned files as a frame, and every
+    /metrics and /render answer stays the same."""
     paths = [f"{m}.{p}" for m in METHODS for p in "xyz"]
 
     def answers():
@@ -135,12 +138,13 @@ def test_byte_bound_zero_answers_the_same_through_spark(spark, engine, monkeypat
         return metrics, renders + [capped]
 
     driver_metrics, driver_renders = answers()
-    monkeypatch.setattr(qmod, "DRIVER_READ_BYTES", 0)
+    pin = engine._pin
+    monkeypatch.setattr(engine, "_pin", lambda *a: pin(*a).frame())
     spark_metrics, spark_renders = answers()
     assert [r for r, _ in driver_metrics] == [r for r, _ in spark_metrics]
     assert driver_renders == spark_renders
     assert all(n == 0 for _, n in driver_metrics)
-    assert all(n > 0 for _, n in spark_metrics)  # the bound really picked Spark
+    assert all(n > 0 for _, n in spark_metrics)  # the frame really ran the Spark plan
     assert driver_metrics[0][0]["series"]["max.x"] == [None, 1.0, None, None, None, None]
 
 
