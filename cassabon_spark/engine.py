@@ -30,8 +30,12 @@ from __future__ import annotations
 import shutil
 import threading
 import time
+from functools import reduce
+from itertools import chain
 from pathlib import Path
 
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -455,9 +459,11 @@ class Engine:
         """Graphite /render with a REAL target string:
         `render_target("summarize(nonNegativeDerivative(evt.*), '1h', 'sum')",
         from_s, to_s)`. Parses the graphite-web grammar
-        (functions.graphite), resolves each glob through the index + read
-        path, evaluates the function chain over grid DataFrames, collects
-        once at the end.
+        (functions.graphite), resolves each glob through the index and the
+        driver-side read, evaluates the function chain over one-partition
+        grid DataFrames, and collects once as Arrow: one Spark job for a
+        chain with no eager step. A one-target `render_targets`, answered
+        by the same code.
 
         timeShift/timeStack fetch their shifted windows through the
         offset-aware resolver; maxDataPoints coarsens the fetch step (with
@@ -466,6 +472,96 @@ class Engine:
         functions (summarize, hitcount) describe their own spacing. When
         series end up on different steps, a per-path "steps" map is added.
         """
+        return self._render([target], from_s, to_s, now_s, max_datapoints)[0]
+
+    def render_targets(
+        self,
+        targets: list[str],
+        from_s: int,
+        to_s: int,
+        now_s: int | None = None,
+        max_datapoints: int | None = None,
+    ) -> dict:
+        """Multiple targets in one response (graphite-web's repeated
+        target= semantics) — the library-level twin of the HTTP /render
+        route. Every target's chain goes into ONE plan collected once, so
+        a request runs as many Spark jobs as one target does. The top-level
+        series dict merges all targets (compat with the reference's
+        MetricResponse shape); per-target responses are preserved under
+        "targets" so same-named series and differing steps stay
+        distinguishable (graphite's JSON list format carries them
+        per-series)."""
+        per_target = [
+            {"target": t, **r}
+            for t, r in zip(
+                targets, self._render(targets, from_s, to_s, now_s, max_datapoints)
+            )
+        ]
+        if not per_target:
+            return {"from": from_s, "to": to_s, "step": 0, "series": {}}
+        merged = {
+            "from": min(r["from"] for r in per_target),
+            "to": to_s,
+            "step": min(r["step"] for r in per_target if r["step"]) if any(
+                r["step"] for r in per_target
+            ) else 0,
+            "series": {},
+            "targets": per_target,
+        }
+        mixed = len({r["step"] for r in per_target}) > 1
+        if mixed:
+            merged["steps"] = {}
+        for r in per_target:
+            merged["series"].update(r["series"])
+            if mixed:
+                merged["steps"].update({p: r["step"] for p in r["series"]})
+        return merged
+
+    def _render(
+        self,
+        targets: list[str],
+        from_s: int,
+        to_s: int,
+        now_s: int | None,
+        max_datapoints: int | None,
+    ) -> list[dict]:
+        """Each target's response, from one collect: every target's grid
+        is tagged with its ordinal `__t`, the grids are unioned (a target
+        without `__ord` reads it as null), collected once as Arrow, sorted
+        by (__t, __ord, path, slot_s) and split per target on the driver."""
+        now = now_s if now_s is not None else int(time.time())
+        plans = [
+            self._render_plan(t, from_s, to_s, now, max_datapoints) for t in targets
+        ]
+        grids = [
+            g.select(F.lit(i).alias("__t"), "path", "slot_s", "stat",
+                     *(["__ord"] if "__ord" in g.columns else []))
+            for i, (g, _) in enumerate(plans)
+            if g is not None
+        ]
+        if grids:
+            union = reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), grids
+            )
+            keys = [k for k in ("__t", "__ord", "path", "slot_s") if k in union.columns]
+            table = qmod.collect_sorted(union, keys)
+            bounds = np.searchsorted(
+                table.column("__t").to_numpy(), np.arange(len(targets) + 1)
+            )
+        out = []
+        for i, (grid, fetch_step) in enumerate(plans):
+            if grid is None:
+                out.append({"from": from_s, "to": to_s, "step": 0, "series": {}})
+            else:
+                rows = table.slice(bounds[i], bounds[i + 1] - bounds[i])
+                out.append(_render_response(rows, fetch_step, from_s, to_s))
+        return out
+
+    def _render_plan(
+        self, target: str, from_s: int, to_s: int, now: int, max_datapoints: int | None
+    ) -> tuple[DataFrame | None, int]:
+        """(the target's evaluated grid, its fetch step); no grid when the
+        target names nothing this engine holds."""
         from cassabon_spark.functions.graphite import (
             TargetSyntaxError,
             evaluate_target,
@@ -473,11 +569,9 @@ class Engine:
             target_consolidations,
             target_globs,
         )
-        from cassabon_spark.operators.query import collect_sorted, normalize_from
 
         node = parse_target(target)
         globs = target_globs(node)
-        now = now_s if now_s is not None else int(time.time())
         md = max_datapoints if max_datapoints is not None else self.MAX_DATAPOINTS
         method_map = {
             "avg": "average", "sum": "sum", "min": "min", "max": "max",
@@ -528,7 +622,7 @@ class Engine:
         if (not needs_store and not has_events) or (
             needs_store and not self._has_store()
         ):
-            return {"from": from_s, "to": to_s, "step": 0, "series": {}}
+            return None, 0
 
         def events_grid(tags: list[str], offset_s: int = 0):
             from cassabon_spark.operators.events import events_count_grid
@@ -566,77 +660,7 @@ class Engine:
             d0 = self.config.route("")
             ctx["step"] = self.config.select_tier(d0.expression, from_s, now).window_s
         grid = evaluate_target(node, grid_for_glob, context=ctx)
-        order = (
-            ["__ord", "path", "slot_s"]
-            if "__ord" in grid.columns
-            else ["path", "slot_s"]
-        )
-        series: dict[str, list] = {}
-        slots_by_path: dict[str, list[int]] = {}
-        for r in collect_sorted(grid, order):
-            series.setdefault(r["path"], []).append(r["stat"])
-            slots_by_path.setdefault(r["path"], []).append(r["slot_s"])
-        fetch_step = step_holder.get("step", 0)
-        # derive per-path output spacing (re-bucketing functions change it)
-        steps = {
-            p: (min(b - a for a, b in zip(s, s[1:])) if len(s) > 1 else fetch_step)
-            for p, s in slots_by_path.items()
-        }
-        out_step = min(steps.values()) if steps else fetch_step
-        out_from = (
-            min(s[0] for s in slots_by_path.values())
-            if slots_by_path
-            else (normalize_from(from_s, fetch_step) if fetch_step else from_s)
-        )
-        resp = {"from": out_from, "to": to_s, "step": out_step, "series": series}
-        if len(set(steps.values())) > 1:
-            resp["steps"] = steps
-            resp["starts"] = {p: s[0] for p, s in slots_by_path.items()}
-        return resp
-
-    def render_targets(
-        self,
-        targets: list[str],
-        from_s: int,
-        to_s: int,
-        now_s: int | None = None,
-        max_datapoints: int | None = None,
-    ) -> dict:
-        """Multiple targets in one response (graphite-web's repeated
-        target= semantics) — the library-level twin of the HTTP /render
-        route. The top-level series dict merges all targets (compat with
-        the reference's MetricResponse shape); per-target responses are
-        preserved under "targets" so same-named series and differing steps
-        stay distinguishable (graphite's JSON list format carries them
-        per-series)."""
-        per_target = [
-            {
-                "target": t,
-                **self.render_target(
-                    t, from_s, to_s, now_s=now_s, max_datapoints=max_datapoints
-                ),
-            }
-            for t in targets
-        ]
-        if not per_target:
-            return {"from": from_s, "to": to_s, "step": 0, "series": {}}
-        merged = {
-            "from": min(r["from"] for r in per_target),
-            "to": to_s,
-            "step": min(r["step"] for r in per_target if r["step"]) if any(
-                r["step"] for r in per_target
-            ) else 0,
-            "series": {},
-            "targets": per_target,
-        }
-        mixed = len({r["step"] for r in per_target}) > 1
-        if mixed:
-            merged["steps"] = {}
-        for r in per_target:
-            merged["series"].update(r["series"])
-            if mixed:
-                merged["steps"].update({p: r["step"] for p in r["series"]})
-        return merged
+        return grid, step_holder.get("step", 0)
 
     def register_views(self, prefix: str = "carbon") -> list[str]:
         """Expose the store and index as temp views so plain spark.sql()
@@ -760,3 +784,36 @@ class Engine:
         shutil.rmtree(self.index_dir)
         Path(tmp).rename(self.index_dir)
         return n + n_tags
+
+
+def _render_response(rows, fetch_step: int, from_s: int, to_s: int) -> dict:
+    """One target's MetricResponse from its collected rows (sorted by
+    __ord, path, slot_s, so each series is one run of rows). `step`/`from`
+    come from the output grid, so re-bucketing functions describe their
+    own spacing."""
+    n = rows.num_rows
+    paths = rows.column("path")
+    cut = pc.not_equal(paths.slice(1), paths.slice(0, max(n - 1, 0)))
+    starts = np.concatenate([[0], np.flatnonzero(cut.to_numpy(zero_copy_only=False)) + 1])
+    runs: dict[str, list[tuple[int, int]]] = {}
+    for name, a, b in zip(paths.take(starts[:n]).to_pylist(), starts, [*starts[1:], n]):
+        runs.setdefault(name, []).append((a, b))
+    slots = rows.column("slot_s").to_numpy()
+    stats = rows.column("stat").to_pylist()
+    series, steps, first = {}, {}, {}
+    for name, spans in runs.items():
+        series[name] = list(chain.from_iterable(stats[a:b] for a, b in spans))
+        own = np.concatenate([slots[a:b] for a, b in spans])
+        steps[name] = np.diff(own).min().item() if len(own) > 1 else fetch_step
+        first[name] = own[0].item()
+    out_step = min(steps.values()) if steps else fetch_step
+    out_from = (
+        min(first.values())
+        if first
+        else (qmod.normalize_from(from_s, fetch_step) if fetch_step else from_s)
+    )
+    resp = {"from": out_from, "to": to_s, "step": out_step, "series": series}
+    if len(set(steps.values())) > 1:
+        resp["steps"] = steps
+        resp["starts"] = first
+    return resp

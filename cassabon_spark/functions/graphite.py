@@ -440,12 +440,6 @@ def evaluate_target(
         # same frame, and the relabel still lands the right rows
         return grid_for_glob(glob)
 
-    def union_all(grids: list[DataFrame]) -> DataFrame:
-        g = grids[0]
-        for g2 in grids[1:]:
-            g = g.unionByName(g2)
-        return g
-
     def ctx_step(fn: str) -> int:
         step = ctx.get("step")
         if not step:
@@ -457,7 +451,8 @@ def evaluate_target(
 
     def generate(nd: Call) -> DataFrame:
         """constantLine / threshold / timeFunction — no fetch, built from
-        the render context as a distributed range (never a driver loop)."""
+        the render context as a one-partition range (never a driver loop),
+        like the fetched grids."""
         spark = ctx.get("spark")
         from_s, to_s = ctx.get("from_s"), ctx.get("to_s")
         step = ctx.get("step") or 60
@@ -465,7 +460,7 @@ def evaluate_target(
             raise TargetSyntaxError(
                 f"{nd.name}() needs a render context (spark, from_s, to_s)"
             )
-        base = spark.range(int(from_s), int(to_s) + 1, int(step)).select(
+        base = spark.range(int(from_s), int(to_s) + 1, int(step), 1).select(
             F.col("id").alias("slot_s")
         )
         if nd.name in ("constantLine", "threshold"):
@@ -551,7 +546,7 @@ def evaluate_target(
         outs = [
             ev(parse_target(template.replace("%", p)), offset) for p in prefixes
         ]
-        return union_all(outs)
+        return sfn.union_grids(outs)
 
     def ev(nd, offset: int = 0) -> DataFrame:
         if isinstance(nd, PathGlob):
@@ -581,7 +576,7 @@ def evaluate_target(
                 )
             if not copies:
                 raise TargetSyntaxError("timeStack range is empty")
-            return union_all(copies)
+            return sfn.union_grids(copies)
         if nd.name == "cumulative":
             # graphite: alias for consolidateBy(seriesList, 'sum') — ride
             # the same scope stack
@@ -791,7 +786,7 @@ def evaluate_target(
             outs = [
                 fetch(p.replace(search, replace), offset) for p in hot
             ]
-            return union_all(outs)
+            return sfn.union_grids(outs)
         if nd.name == "divideSeriesLists":
             series_args = [a for a in nd.args if isinstance(a, (Call, PathGlob))]
             if len(series_args) != 2:
@@ -815,7 +810,7 @@ def evaluate_target(
             divisor = nd.args[1].glob
             if any(ch in divisor for ch in "*?[{"):
                 raise TargetSyntaxError("divideSeries divisor must not be a glob")
-            u = ev(nd.args[0], offset).unionByName(ev(nd.args[1], offset))
+            u = sfn.union_grids([ev(nd.args[0], offset), ev(nd.args[1], offset)])
             return sfn.divide_series(u, divisor)
         if nd.name == "diffSeries":
             if not nd.args or not isinstance(nd.args[0], PathGlob):
@@ -826,7 +821,7 @@ def evaluate_target(
             if any(ch in base for ch in "*?[{"):
                 raise TargetSyntaxError("diffSeries base must not be a glob")
             grids = [ev(a, offset) for a in nd.args]
-            return sfn.diff_series(union_all(grids), base)
+            return sfn.diff_series(sfn.union_grids(grids), base)
         spec = _SPECS.get(nd.name)
         if spec is None:
             raise TargetSyntaxError(f"unknown function {nd.name!r}")
@@ -848,7 +843,7 @@ def evaluate_target(
                 scalars[1:]
             )
         try:
-            return spec(union_all(series_grids), *scalars)
+            return spec(sfn.union_grids(series_grids), *scalars)
         except (ValueError, KeyError) as e:
             # bad method name / bad scalar — surface as a target error, not
             # a 500 (ADVICE: summarize(x,'1h','bogus') must not KeyError)

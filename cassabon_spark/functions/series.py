@@ -20,8 +20,20 @@ Graphite function parity (graphite-web names):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def union_grids(grids: list[DataFrame]) -> DataFrame:
+    """Union of grids on ONE partition. Render grids are bounded by the
+    cells cap, and a child that reports SinglePartition satisfies every
+    distribution a window, aggregate or join asks for, so the planner adds
+    no exchange above it and the chain runs in one stage."""
+    if len(grids) == 1:
+        return grids[0]
+    return reduce(DataFrame.unionByName, grids).coalesce(1)
 
 
 def _w(order: str = "slot_s"):
@@ -526,13 +538,12 @@ def time_stack(
     """Graphite timeStack(): overlay shifted copies of each series
     (compare this day against the previous N). Copy i shifts forward by
     i*shift_s and renames to `path_shift_i`; one union of narrow grids."""
-    out = None
-    for i in range(start, end):
-        c = time_shift(grid, i * shift_s).withColumn(
+    return union_grids([
+        time_shift(grid, i * shift_s).withColumn(
             "path", F.concat(F.col("path"), F.lit(f"_shift_{i}"))
         )
-        out = c if out is None else out.unionByName(c)
-    return out
+        for i in range(start, end)
+    ])
 
 
 def weighted_average(
@@ -613,20 +624,21 @@ def limit_series(grid: DataFrame, n: int) -> DataFrame:
 
 def divide_series(grid: DataFrame, divisor_path: str) -> DataFrame:
     """Divide every series by the divisor series, slot-wise
-    (divideSeries(dividend, divisor)): one pass of conditional aggregation
-    per slot to extract the divisor, broadcast back onto the grid — the
-    divisor grid is slots-sized, never data-sized. Division by 0/null and
-    missing divisor slots -> null (Graphite None)."""
-    div = grid.filter(F.col("path") == divisor_path).select(
-        "slot_s", F.col("stat").alias("__div")
+    (divideSeries(dividend, divisor)): the divisor's value per slot is a
+    conditional aggregate over a slot_s window, so the grid is read once
+    with no join (and no exchange over a one-partition grid). Division by
+    0/null and missing divisor slots -> null (Graphite None)."""
+    div = F.max(F.when(F.col("path") == divisor_path, F.col("stat"))).over(
+        Window.partitionBy("slot_s")
     )
-    out = grid.filter(F.col("path") != divisor_path).join(
-        F.broadcast(div), "slot_s", "left"
-    )
-    return out.select(
-        "path",
-        "slot_s",
-        F.when(F.col("__div") != 0, F.col("stat") / F.col("__div")).alias("stat"),
+    return (
+        grid.withColumn("__div", div)
+        .filter(F.col("path") != divisor_path)
+        .select(
+            "path",
+            "slot_s",
+            F.when(F.col("__div") != 0, F.col("stat") / F.col("__div")).alias("stat"),
+        )
     )
 
 
@@ -1207,7 +1219,35 @@ def holt_winters_bands_series(
         "slot_s",
         F.col("lower").alias("stat"),
     )
-    return upper.unionByName(lower)
+    return union_grids([upper, lower])
+
+
+def _series_counts(first: DataFrame, second: DataFrame) -> tuple[int, int]:
+    """Distinct series in each of two lists, from ONE job: a side-tagged
+    one-partition union grouped by side."""
+    tagged = union_grids([
+        first.select(F.lit(0).alias("__side"), "path"),
+        second.select(F.lit(1).alias("__side"), "path"),
+    ])
+    n = {
+        r["__side"]: r["n"]
+        for r in tagged.groupBy("__side").agg(F.countDistinct("path").alias("n")).collect()
+    }
+    return n.get(0, 0), n.get(1, 0)
+
+
+def _paired(first: DataFrame, second: DataFrame, val: str) -> DataFrame:
+    """Pair two series lists positionally IN PATH ORDER (graphite zips
+    them): (path, slot_s, stat, `val`) with `val` the second list's value
+    at the same rank and slot. A sort-merge join keeps two one-partition
+    grids from being broadcast (a BroadcastExchange is a job of its own)."""
+    d1 = first.select("path", "slot_s", "stat").withColumn(
+        "__i", F.dense_rank().over(Window.orderBy("path"))
+    )
+    d2 = second.select(
+        F.col("path").alias("__p2"), "slot_s", F.col("stat").alias(val)
+    ).withColumn("__i", F.dense_rank().over(Window.orderBy("__p2")))
+    return d1.join(d2.hint("merge"), ["__i", "slot_s"], "left")
 
 
 def divide_series_lists(dividends: DataFrame, divisors: DataFrame) -> DataFrame:
@@ -1216,23 +1256,14 @@ def divide_series_lists(dividends: DataFrame, divisors: DataFrame) -> DataFrame:
     slot-wise. Mismatched list lengths raise ValueError like graphite-web's
     explicit error (ADVICE r2 #4) — evaluate_target converts it to
     TargetSyntaxError/HTTP 400. Both inputs are render-sized, so the two
-    distinct counts are one cheap job each."""
-    n1 = dividends.select("path").distinct().count()
-    n2 = divisors.select("path").distinct().count()
+    counts come from one job."""
+    n1, n2 = _series_counts(dividends, divisors)
     if n1 != n2:
         raise ValueError(
             f"divideSeriesLists: dividend has {n1} series but divisor has "
             f"{n2}; the lists must be the same length"
         )
-    rank = Window.orderBy("path")
-    d1 = dividends.select("path", "slot_s", "stat").withColumn(
-        "__i", F.dense_rank().over(rank)
-    )
-    d2 = divisors.select(
-        F.col("path").alias("__dp"), "slot_s", F.col("stat").alias("__div")
-    ).withColumn("__i", F.dense_rank().over(Window.orderBy("__dp")))
-    out = d1.join(d2, ["__i", "slot_s"], "left")
-    return out.select(
+    return _paired(dividends, divisors, "__div").select(
         "path",
         "slot_s",
         F.when(F.col("__div") != 0, F.col("stat") / F.col("__div")).alias("stat"),
@@ -1275,8 +1306,7 @@ def aggregate_series_lists(a: DataFrame, b: DataFrame, how: str = "sum") -> Data
     """aggregateSeriesLists(listA, listB, func): pair the two lists
     positionally IN PATH ORDER (the divideSeriesLists pairing, generalized)
     and combine slot-wise. Mismatched lengths raise like graphite-web."""
-    n1 = a.select("path").distinct().count()
-    n2 = b.select("path").distinct().count()
+    n1, n2 = _series_counts(a, b)
     if n1 != n2:
         raise ValueError(
             f"aggregateSeriesLists: first list has {n1} series but second "
@@ -1295,17 +1325,7 @@ def aggregate_series_lists(a: DataFrame, b: DataFrame, how: str = "sum") -> Data
         raise ValueError(
             f"aggregateSeriesLists func {how!r}: one of {sorted(combos)}"
         )
-    rank = Window.orderBy("path")
-    d1 = a.select("path", "slot_s", "stat").withColumn(
-        "__i", F.dense_rank().over(rank)
-    )
-    d2 = b.select(
-        F.col("path").alias("__bp"), "slot_s", F.col("stat").alias("__o")
-    ).withColumn("__i", F.dense_rank().over(Window.orderBy("__bp")))
-    return (
-        d1.join(d2, ["__i", "slot_s"], "left")
-        .select("path", "slot_s", combos[how].alias("stat"))
-    )
+    return _paired(a, b, "__o").select("path", "slot_s", combos[how].alias("stat"))
 
 
 def group_by_tags(grid: DataFrame, how: str, *tags: str) -> DataFrame:

@@ -109,7 +109,7 @@ def events_count_grid(
     graphite's value arrays."""
     step = max(int(step), 1)
     name = f"events({', '.join(tags or [])})" if tags else "events()"
-    spine = spark.range(int(from_s), int(to_s) + 1, step).select(
+    spine = spark.range(int(from_s), int(to_s) + 1, step, 1).select(
         F.col("id").cast("bigint").alias("slot_s")
     )
     ev = find_events(spark, events_dir, from_s, to_s, tags)

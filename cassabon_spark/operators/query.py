@@ -21,8 +21,11 @@ scans the kept files batch by batch and numpy folds each batch into the
 grid (merge, NaN scrub, spine), so a read runs no Spark job — the way the
 reference answers from one Cassandra partition per path — and holds one
 batch plus the cells-capped grid in memory. GET /metrics answers straight
-from that grid; /render hands it to `spark.createDataFrame` (a
-LocalTableScan), so only the graphite function chain runs in Spark.
+from that grid. /render hands it to `spark.createDataFrame` on ONE
+partition (`Coalesce 1`, so the grid reports SinglePartition and the
+planner adds no exchange under the function chain's windows, aggregates
+and joins); every target of a request is evaluated into one plan and
+collected once as Arrow (`collect_sorted`), so a render runs one Spark job.
 Measured against the Spark plan on 0.5-142 MiB of kept files
 (tools/driver_read_sizes.py), the driver was faster at every size.
 
@@ -160,15 +163,16 @@ def query_metrics_df(
     return spine.join(bucketed, ["path", "slot_s"], "left").select("path", "slot_s", "stat")
 
 
-def collect_sorted(df: DataFrame, keys: list[str]) -> list:
-    """collect(), then sort on the driver by `keys` ascending, nulls first
-    (orderBy's order). Read results are already bounded by max_cells, so a
-    global orderBy before the collect would only add its range-sampling job
-    and a shuffle."""
-    idx = [df.columns.index(k) for k in keys]
-    rows = df.collect()
-    rows.sort(key=lambda r: tuple((r[i] is not None, r[i]) for i in idx))
-    return rows
+def collect_sorted(df: DataFrame, keys: list[str]) -> pa.Table:
+    """One Arrow collect (`toArrow`), sorted on the driver by `keys`
+    ascending, nulls first (orderBy's order). Read results are already
+    bounded by max_cells, so a global orderBy before the collect would only
+    add its range-sampling job and a shuffle."""
+    table = df.toArrow()
+    order = pc.sort_indices(
+        table, sort_keys=[(k, "ascending") for k in keys], null_placement="at_start"
+    )
+    return table.take(order)
 
 
 @dataclass(frozen=True)
@@ -326,12 +330,12 @@ class Fetch:
     def frame(self, spark: SparkSession, store) -> DataFrame:
         """The (path, slot_s, stat) grid of a one-group fetch (a render
         glob). A StoreRead's grid is built on the driver and handed to
-        Spark as a local relation; a DataFrame store runs the Spark plan."""
+        Spark as a local relation on one partition, so the function chain
+        above it plans no exchange; a DataFrame store runs the Spark plan."""
         ((key, paths),) = self.groups.items()
         if isinstance(store, StoreRead):
-            return spark.createDataFrame(
-                arrow_grid(store, paths, self.from_s, self.to_s, *key), GRID_SCHEMA
-            )
+            grid = arrow_grid(store, paths, self.from_s, self.to_s, *key)
+            return spark.createDataFrame(grid, GRID_SCHEMA).coalesce(1)
         return self._spark_grid(spark, store, key, paths)
 
     def run(self, spark: SparkSession, store) -> dict:
@@ -346,11 +350,10 @@ class Fetch:
         for key, paths in self.groups.items():
             if isinstance(store, StoreRead):
                 g = arrow_grid(store, paths, self.from_s, self.to_s, *key)
-                rows = zip(g.column("path").to_pylist(), g.column("stat").to_pylist())
             else:
                 grid = self._spark_grid(spark, store, key, paths)
-                rows = ((r["path"], r["stat"]) for r in collect_sorted(grid, ["path", "slot_s"]))
-            for p, v in rows:
+                g = collect_sorted(grid, ["path", "slot_s"])
+            for p, v in zip(g.column("path").to_pylist(), g.column("stat").to_pylist()):
                 series.setdefault(p, []).append(v)
         step = self.step
         return {

@@ -136,6 +136,25 @@ def lsh_bucket_topk(
     )
 
 
+#: Partitions the coarse quantizer is fit on. KMeans' k-means||
+#: initialisation draws per partition (seeded by partition index), so the
+#: cells follow how the input is split; fitting on a fixed hash
+#: partitioning of `cid`, each partition sorted by `cid`, gives the same
+#: centres whatever the caller's partition count.
+QUANTIZER_PARTITIONS = 8
+
+
+def fit_quantizer(vectors: DataFrame, n_cells: int, seed: int = 42, max_iter: int = 10):
+    """pyspark.ml KMeans over (cid, fv) fit on a canonical partitioning of
+    the rows (QUANTIZER_PARTITIONS by hash of cid, sorted by cid)."""
+    from pyspark.ml.clustering import KMeans
+
+    canonical = vectors.repartition(QUANTIZER_PARTITIONS, "cid").sortWithinPartitions("cid")
+    return KMeans(
+        k=n_cells, seed=seed, maxIter=max_iter, featuresCol="fv", predictionCol="cell"
+    ).fit(canonical)
+
+
 def ivf_kmeans_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -155,13 +174,13 @@ def ivf_kmeans_topk(
     ||a-b||^2 = 2 - 2cos, monotone in cosine); the final rerank uses true
     cosine on the original vectors (scale-invariant, so identical ranking).
 
-    Scale shape: training samples the corpus (k-means|| init), the corpus is
+    Scale shape: training samples the corpus (k-means|| init, on a
+    canonical partitioning: `fit_quantizer`), the corpus is
     assigned to cells in ONE pass and bucketed; each query probes its nprobe
     nearest centroids and scans only those cells — |corpus| * nprobe /
     n_cells candidate evaluations instead of |corpus| * |queries|. Centroids
     broadcast (n_cells x dim floats). Returns (qid, cid, cosine, rnk).
     """
-    from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     unit = F.transform(
@@ -172,9 +191,7 @@ def ivf_kmeans_topk(
         F.col(vec_col).alias("ce"),
         array_to_vector(unit).alias("fv"),
     )
-    model = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter, featuresCol="fv", predictionCol="cell"
-    ).fit(c)
+    model = fit_quantizer(c, n_cells, seed, max_iter)
     cells = model.transform(c).select("cid", "ce", "cell")
 
     centers = F.array(

@@ -145,6 +145,25 @@ def test_ivf_kmeans_topk_recall_and_probe_bound(spark):
     assert again == got
 
 
+def test_quantizer_ignores_input_partitioning(spark, sf_dir):
+    """The IVF quantizer's centres and cells are the same whether its input
+    arrives on 4 or 32 partitions (k-means|| draws per partition)."""
+    from pyspark.ml.functions import array_to_vector
+
+    from cassabon_spark.operators.similarity import fit_quantizer
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    c = emb.select(F.col("vec_id").alias("cid"), array_to_vector("embedding").alias("fv"))
+    fits = []
+    for n in (4, 32):
+        split = c.repartition(n, F.rand(seed=n))
+        model = fit_quantizer(split, 8)
+        cells = {r["cid"]: r["cell"] for r in model.transform(split).select("cid", "cell").collect()}
+        fits.append(([list(x) for x in model.clusterCenters()], cells))
+    assert fits[0] == fits[1]
+    assert len(set(fits[0][1].values())) == 8
+
+
 def test_pq_adc_recall_sanity(spark):
     """PQ-ADC with a 16-code deterministic codebook is a coarse quantizer;
     assert it beats random guessing on recall@5 vs exact cosine top-k and

@@ -23,7 +23,7 @@ METHODS = ["average", "sum", "min", "max", "last"]
 #: one route per method, so one store holds every method's stat column
 CFG = RollupConfig.from_dict(
     {
-        m: {"pattern": rf"^{m}\.", "method": m, "windows": ["10s:1d", "60s:1d"]}
+        m: {"pattern": rf"^{m}\.", "method": m, "windows": ["10s:1d", "60s:2d"]}
         for m in METHODS
     }
 )
@@ -80,7 +80,7 @@ def test_driver_grid_matches_spark_plan(spark, tmp_path_factory, rows, params):
         grid = qmod.query_metrics_df(
             spark, store.frame(), paths, from_s, to_s, step, m, resolution_s=res
         )
-        _same_grid(arrow.to_pylist(), qmod.collect_sorted(grid, ["path", "slot_s"]))
+        _same_grid(arrow.to_pylist(), qmod.collect_sorted(grid, ["path", "slot_s"]).to_pylist())
 
 
 @pytest.fixture(scope="module")
@@ -149,8 +149,9 @@ def test_engine_answers_the_same_through_the_spark_plan(spark, engine, monkeypat
 
 
 def test_small_reads_run_few_jobs(spark, engine):
-    """/metrics runs no Spark job; a windowed render runs only its function
-    chain's (the grid is a local relation, not a scan, join and exchange)."""
+    """/metrics runs no Spark job; a render runs one (its grids are local
+    relations on one partition, so windows, aggregates and unions plan no
+    exchange, and every target is collected at once)."""
     engine._result_cache.clear()
     resp, n = _jobs(
         spark, lambda: engine.get_metrics(["average.x", "average.y"], 995, 1035, now_s=2000)
@@ -160,5 +161,80 @@ def test_small_reads_run_few_jobs(spark, engine):
     resp, n = _jobs(
         spark, lambda: engine.render_target("movingAverage(average.*,3)", 995, 1035, now_s=2000)
     )
-    assert n <= 2
+    assert n == 1
     assert resp["series"]["average.y"] == [None, None, None, 3.5]
+    resp, n = _jobs(spark, lambda: engine.render_target("sumSeries(average.*)", 995, 1035, now_s=2000))
+    assert n == 1
+    assert resp["series"] == {"sumSeries": [None, 1.0, None, 3.5]}
+    # two globs: the union of their grids stays on one partition
+    resp, n = _jobs(
+        spark, lambda: engine.render_target("sumSeries(average.*, max.*)", 995, 1035, now_s=2000)
+    )
+    assert n == 1
+    assert resp["series"] == {"sumSeries": [None, 2.0, None, 8.5]}
+
+
+def test_render_jobs_do_not_grow_with_targets(spark, engine):
+    one, n1 = _jobs(spark, lambda: engine.render_targets(TARGETS[:1], 995, 1045, now_s=2000))
+    five, n5 = _jobs(spark, lambda: engine.render_targets(TARGETS, 995, 1045, now_s=2000))
+    assert n1 == 1 and n5 <= n1
+    assert five["targets"][0] == one["targets"][0]
+
+
+def test_divide_series_lists_counts_in_one_job(spark, engine):
+    """The two list lengths come from one job, the answer from one more;
+    a length mismatch is still a target error."""
+    from cassabon_spark.functions.graphite import TargetSyntaxError
+
+    resp, n = _jobs(
+        spark,
+        lambda: engine.render_target("divideSeriesLists(max.*, sum.*)", 995, 1045, now_s=2000),
+    )
+    assert n == 2
+    assert resp["series"]["max.x"] == [None, 1.0, None, None, None]
+    with pytest.raises(TargetSyntaxError, match="dividend has 3 series but divisor has 1"):
+        engine.render_target("divideSeriesLists(max.*, sum.x)", 995, 1045, now_s=2000)
+
+
+@pytest.mark.parametrize(
+    "target",
+    ["movingAverage(average.*,3)", "sumSeries(average.*, max.*)", "divideSeries(max.*, sum.y)"],
+)
+def test_render_plans_have_no_exchange(spark, engine, monkeypatch, target):
+    grids = []
+    collect = qmod.collect_sorted
+
+    def capture(df, keys):
+        grids.append(df)
+        return collect(df, keys)
+
+    monkeypatch.setattr(qmod, "collect_sorted", capture)
+    resp = engine.render_target(target, 995, 1045, now_s=2000)
+    assert resp["series"]
+    (grid,) = grids
+    assert "Exchange" not in grid._jdf.queryExecution().executedPlan().toString()
+
+
+def test_render_targets_match_one_target_renders(spark, engine):
+    """One collect for five targets answers each exactly as its own render:
+    a presentation order (__ord), a coarser step (steps/starts), series on
+    two steps in one target, and a glob that matches nothing."""
+    targets = [
+        "movingAverage(average.*,3)",
+        "sortByName(max.*)",
+        "summarize(sum.*,'1min')",
+        "group(summarize(average.x,'1min'), last.y)",
+        "nomatch.*",
+    ]
+    merged = engine.render_targets(targets, 995, 1165, now_s=2000)
+    singles = [engine.render_target(t, 995, 1165, now_s=2000) for t in targets]
+    assert [r["target"] for r in merged["targets"]] == targets
+    for got, want in zip(merged["targets"], singles):
+        got = dict(got)
+        del got["target"]
+        assert got == want
+        assert list(got["series"]) == list(want["series"])  # series order too
+    assert singles[3]["steps"] == {"average.x": 60, "last.y": 10}
+    assert "starts" in singles[3]
+    assert singles[4] == {"from": 995, "to": 1165, "step": 0, "series": {}}
+    assert merged["step"] == 10 and merged["steps"]["sum.x"] == 60
