@@ -21,8 +21,9 @@ Scale notes:
     holding hits; readers keep the snapshot they started on. Nothing
     touches the rest of a 100 TB store.
   * Retention is a manifest-only partition drop; bytes go at vacuum.
-  * Index maintenance is incremental: new paths are discovered per ingest
-    with an anti-join against the existing index and appended.
+  * Index maintenance is incremental and runs on the driver: each ingest
+    diffs the paths of its staged store files against the driver copy of
+    the index and appends only first sightings.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ from itertools import chain
 from pathlib import Path
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,12 +44,14 @@ from pyspark.sql import functions as F
 from cassabon_spark.config import RollupConfig
 from cassabon_spark.operators import query as qmod
 from cassabon_spark.operators.index import (
+    INDEX_SCHEMA,
     PathIndex,
     glob_depth,
     glob_to_regex,
+    index_hook,
     load_index,
     merge_index_rows,
-    update_indexes,
+    publish_part,
 )
 from cassabon_spark.operators.rollup import (
     PARTITION_COLS,
@@ -97,9 +101,6 @@ class Engine:
         self._result_cache_max = 256
         self._result_cache_lock = threading.Lock()  # the HTTP server is threaded
         self.cache_stats = {"hits": 0, "misses": 0}
-        # driver-side copy of the path index (operators.index.load_index),
-        # replaced whole whenever the index directory's file listing changes
-        self._index_copy: PathIndex | None = None
         # manifest-pruning effectiveness across store_for reads: files the
         # manifest listed vs files actually planned
         self.prune_stats = {"files_total": 0, "files_read": 0, "reads": 0}
@@ -130,16 +131,10 @@ class Engine:
         return merge_index_rows(self.spark.read.parquet(self.index_dir))
 
     def _path_index(self) -> PathIndex:
-        idx = load_index(self.index_dir, self._index_copy)
-        self._index_copy = idx  # one reference swap: readers never see a half-built copy
-        return idx
+        return load_index(self.index_dir)  # shared with this process's ingest
 
     def _has_store(self) -> bool:
         return bool(self.table.snapshot()["files"])
-
-    def _has_index(self) -> bool:
-        p = Path(self.index_dir)
-        return p.exists() and any(p.iterdir())
 
     # ------------------------------------------------------------ write path
 
@@ -148,26 +143,21 @@ class Engine:
         validate -> route -> all rollup tiers -> partitioned store append;
         index updated incrementally. Returns ingest counters."""
         metrics, obs = parse_carbon_lines(lines, line_col=line_col, observe=True)
-        # the count, the rollup and the index update each read the parsed
-        # rows: materialise them once so `lines` is read once. The
-        # checkpoint job also fills the malformed-count observation.
-        metrics = metrics.localCheckpoint()
+        # the finest-tier checkpoint reads `lines` once, filling `obs`
+        finest, tiers = rollup_tiers(metrics, self.config)
         try:
-            n_ok = metrics.count()
-            finest, tiers = rollup_tiers(metrics, self.config)
-            try:
-                self.table.append(
-                    with_date_bucket(tiers)
-                    .repartition(*PARTITION_COLS, "path")
-                    .sortWithinPartitions("path", "time"),
-                    partition_cols=PARTITION_COLS,
-                )
-            finally:
-                release_checkpoint(finest)
-            update_indexes(self.spark, metrics, self.index_dir, self.tag_index_dir)
+            self.table.append(
+                with_date_bucket(tiers)
+                .repartition(*PARTITION_COLS, "path")
+                .sortWithinPartitions("path", "time"),
+                partition_cols=PARTITION_COLS,
+                before_commit=index_hook(
+                    self.spark, self.table, self.index_dir, self.tag_index_dir
+                ),
+            )
         finally:
-            release_checkpoint(metrics)
-        return {"received": n_ok, "rejected": obs.get["malformed"]}
+            release_checkpoint(finest)
+        return {"received": obs.get["ok"], "rejected": obs.get["malformed"]}
 
     def start_streaming_ingest(self, lines_dir: str, checkpoint_dir: str, **kw):
         """Streaming ingest (partial-agg appends + merge-at-read; see
@@ -673,7 +663,7 @@ class Engine:
         if self._has_store():
             self.store.createOrReplaceTempView(f"{prefix}_store")
             names.append(f"{prefix}_store")
-        if self._has_index():
+        if self._path_index().listing:
             self.index.createOrReplaceTempView(f"{prefix}_index")
             names.append(f"{prefix}_index")
         return names
@@ -767,23 +757,17 @@ class Engine:
                 .collect()
             ]
             n_tags = purge_tag_index_series(self.spark, self.tag_index_dir, tag_hit)
-        if not self._has_index():
+        idx = self._path_index()
+        hit = {r["path"] for r in idx.glob(glob)}
+        if not hit:
             return n_tags
-        hit = (F.col("depth") == glob_depth(glob)) & F.col("path").rlike(
-            glob_to_regex(glob)
-        )
-        idx = self.index
-        n = idx.filter(hit).count()
-        if n == 0:
-            return n_tags
-        remaining = idx.filter(~hit).cache()
-        remaining.count()
+        kept = [r for rows in idx.by_depth.values() for r in rows if r[0] not in hit]
         tmp = self.index_dir + "_rewrite"
-        remaining.write.mode("overwrite").parquet(tmp)
-        remaining.unpersist()
+        shutil.rmtree(tmp, ignore_errors=True)
+        publish_part(tmp, pa.table(list(zip(*kept)) or [[]] * 4, schema=INDEX_SCHEMA))
         shutil.rmtree(self.index_dir)
         Path(tmp).rename(self.index_dir)
-        return n + n_tags
+        return len(hit) + n_tags
 
 
 def _render_response(rows, fetch_step: int, from_s: int, to_s: int) -> dict:

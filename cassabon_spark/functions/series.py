@@ -532,20 +532,6 @@ def maximum_below(grid: DataFrame, n: float) -> DataFrame:
     return grid.join(F.broadcast(keep), "path", "left_semi")
 
 
-def time_stack(
-    grid: DataFrame, shift_s: int, start: int = 0, end: int = 7
-) -> DataFrame:
-    """Graphite timeStack(): overlay shifted copies of each series
-    (compare this day against the previous N). Copy i shifts forward by
-    i*shift_s and renames to `path_shift_i`; one union of narrow grids."""
-    return union_grids([
-        time_shift(grid, i * shift_s).withColumn(
-            "path", F.concat(F.col("path"), F.lit(f"_shift_{i}"))
-        )
-        for i in range(start, end)
-    ])
-
-
 def weighted_average(
     avg_grid: DataFrame, weight_grid: DataFrame, *nodes: int
 ) -> DataFrame:

@@ -10,20 +10,23 @@ a small DataFrame/table of (path, depth, tenant, leaf):
   - DELETE /paths is routed but unimplemented in the reference
     (indexmanager.go:294-296) — implemented here.
 
-Spark-first: expansion is posexplode over split — no Python row loop. The
-index table is tiny relative to the data (distinct paths), so the serving
-side reads it onto the driver (load_index) and answers a glob with a regex
-over one depth bucket, like the reference's in-memory leaf set
-(indexmanager.go:142-184, metricmanager.go:82-87); search_glob is the same
-match as a Spark filter.
+The index table is tiny relative to the data (distinct paths), so it lives
+on the driver like the reference's in-memory leaf set
+(indexmanager.go:142-184, metricmanager.go:82-87): a glob is a regex over
+one depth bucket (search_glob is the same match in Spark), and ingest
+appends only a batch's first sightings (update_index_incremental).
 """
 
 from __future__ import annotations
 
 import os
 import re
+import uuid
 from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -58,16 +61,6 @@ def expand_ancestors(paths_df: DataFrame, path_col: str = "path") -> DataFrame:
     )
 
 
-def build_index(metrics: DataFrame, path_col: str = "path") -> DataFrame:
-    """Distinct metric paths -> expanded index table (A18).
-
-    In the streaming pipeline this runs inside foreachBatch as an anti-join
-    against the existing index (only new paths expand), mirroring the
-    reference's new-path detection (datastore/metricstore.go:67-74).
-    """
-    return expand_ancestors(metrics.select(path_col).distinct(), path_col)
-
-
 def glob_to_regex(glob: str) -> str:
     """Metric glob -> anchored regex.
 
@@ -78,8 +71,6 @@ def glob_to_regex(glob: str) -> str:
     (alternation), '[0-9]' (char class, passed through). Everything else is
     regex-escaped. The result means the same to Python's re and to Java's
     rlike."""
-    import re as _re
-
     out, i, n = [], 0, len(glob)
     while i < n:
         c = glob[i]
@@ -90,20 +81,20 @@ def glob_to_regex(glob: str) -> str:
         elif c == "{":
             end = glob.find("}", i)
             if end < 0:
-                out.append(_re.escape(c))
+                out.append(re.escape(c))
             else:
                 alts = glob[i + 1 : end].split(",")
-                out.append("(" + "|".join(_re.escape(a) for a in alts) + ")")
+                out.append("(" + "|".join(re.escape(a) for a in alts) + ")")
                 i = end
         elif c == "[":
             end = glob.find("]", i)
             if end < 0:
-                out.append(_re.escape(c))
+                out.append(re.escape(c))
             else:
                 out.append(glob[i : end + 1])
                 i = end
         else:
-            out.append(_re.escape(c))
+            out.append(re.escape(c))
         i += 1
     return "^" + "".join(out) + "$"
 
@@ -125,11 +116,13 @@ class PathIndex(NamedTuple):
     """Driver-side copy of one index directory: `listing` is the
     (name, size, mtime_ns) of every parquet part it was read from, `by_depth`
     maps depth -> (path, depth, tenant, leaf) rows sorted by path, one row
-    per (path, depth, tenant). Never mutated after load_index builds it, so
-    threads can share it without a lock."""
+    per (path, depth, tenant), `leaf` maps each path to max(leaf) over its
+    rows. Never mutated after it is built, so threads can share it without
+    a lock."""
 
     listing: tuple
     by_depth: dict
+    leaf: dict
 
     def glob(self, glob: str) -> list[dict]:
         """A17 on the driver: depth-matched regex search, sorted by path
@@ -156,30 +149,42 @@ def _parquet_listing(index_dir: str) -> tuple:
     return tuple(sorted(out))
 
 
-def load_index(index_dir: str, cached: PathIndex | None = None) -> PathIndex:
-    """Read the index directory onto the driver with pyarrow (no Spark job).
-    Returns `cached` unchanged while the directory's parquet listing is the
-    one it was read from; any append (update_index_incremental), rewrite
-    (Engine.delete_paths renames a new directory into place) or writer in
-    another process changes the listing and forces a re-read. Rows of the
-    same (path, depth, tenant) merge with max(leaf): a path first indexed as
-    a prefix and later ingested as a metric has both rows stored."""
-    import pyarrow.parquet as pq
+INDEX_SCHEMA = pa.schema(
+    [("path", pa.string()), ("depth", pa.int32()), ("tenant", pa.string()), ("leaf", pa.bool_())]
+)
 
+#: index directory -> the latest driver copy this process read or wrote.
+#: Process-wide because a streaming batch has no owner object to keep it
+#: on, and so the ingest writers and the Engine readers share one copy;
+#: every use checks it against the directory's current listing.
+_COPIES: dict[str, PathIndex] = {}
+
+
+def load_index(index_dir: str) -> PathIndex:
+    """Read the index directory onto the driver with pyarrow (no Spark job).
+    The copy is kept per directory while its parquet listing is unchanged.
+    Rows of the same (path, depth, tenant) merge with max(leaf): a path
+    first indexed as a prefix and later ingested as a metric has both rows
+    stored."""
     listing = _parquet_listing(index_dir)
+    cached = _COPIES.get(index_dir)
     if cached is not None and cached.listing == listing:
         return cached
-    leaf: dict[tuple, bool] = {}
+    merged: dict[tuple, bool] = {}
     for name, _, _ in listing:
         t = pq.read_table(
             os.path.join(index_dir, name), columns=["path", "depth", "tenant", "leaf"]
         ).to_pydict()
         for p, d, tn, lf in zip(t["path"], t["depth"], t["tenant"], t["leaf"]):
-            leaf[(p, d, tn)] = leaf.get((p, d, tn), False) or bool(lf)
+            merged[(p, d, tn)] = merged.get((p, d, tn), False) or bool(lf)
     by_depth: dict[int, list] = {}
-    for (p, d, t), lf in sorted(leaf.items()):
+    leaf: dict[str, bool] = {}
+    for (p, d, t), lf in sorted(merged.items()):
         by_depth.setdefault(d, []).append((p, d, t, lf))
-    return PathIndex(listing, {d: tuple(rows) for d, rows in by_depth.items()})
+        leaf[p] = leaf.get(p, False) or lf
+    # one reference swap: readers never see a half-built copy
+    _COPIES[index_dir] = idx = PathIndex(listing, {d: tuple(r) for d, r in by_depth.items()}, leaf)
+    return idx
 
 
 def merge_index_rows(index: DataFrame) -> DataFrame:
@@ -210,49 +215,78 @@ def route_pure(paths: list[str], patterns: list[str]) -> list[str]:
     return out
 
 
-def update_index_incremental(spark, metrics: DataFrame, index_dir: str) -> None:
-    """A18 incremental maintenance: expand ancestors of NEW paths only
-    (anti-join against the stored index) and append. Mirrors the reference's
-    new-path detection during ingest (datastore/metricstore.go:67-74 ->
-    indexmanager.go:225-278) with one durable parquet table instead of ES.
-    Used by both the Engine facade and the streaming foreachBatch writer.
-
-    A metric whose path is already stored as a non-leaf prefix (a.b after
-    a.b.c) appends a leaf row next to the stored one; readers merge the two
-    with max(leaf) (load_index, merge_index_rows).
-    """
-    paths = metrics.select("path").distinct()
-    has_index = os.path.isdir(index_dir) and any(os.scandir(index_dir))
-    if has_index:
-        existing = spark.read.parquet(index_dir)
-        paths = paths.join(existing.filter(F.col("leaf")).select("path"), "path", "left_anti")
-        if paths.isEmpty():
-            # no first sightings: appending would add an empty parquet part
-            # that every later index scan lists and opens
-            return
-        stored = existing.select(F.col("path").alias("_p"), F.col("leaf").alias("_leaf"))
-        new_rows = expand_ancestors(paths).join(
-            stored,
-            (F.col("path") == F.col("_p")) & (F.col("_leaf") | ~F.col("leaf")),
-            "left_anti",
-        )
-    else:
-        new_rows = expand_ancestors(paths)
-    new_rows.write.mode("append").parquet(index_dir)
-
-
-def update_indexes(spark, metrics: DataFrame, index_dir: str, tag_index_dir: str) -> None:
-    """New paths of `metrics` into both indexes: dot paths into the path
-    index, tagged series (`;tag=v`) into the tag index, never the dot tree
-    (operators/tags.py). Shared by Engine.ingest_lines and the streaming
-    foreachBatch writer."""
-    from cassabon_spark.operators.tags import (
-        is_tagged_expr,
-        update_tag_index_incremental,
+def new_index_rows(paths, stored_leaf: dict) -> list[tuple[str, int, str, bool]]:
+    """Index rows `paths` add to an index whose paths map to `stored_leaf`:
+    expand_ancestors of the paths not stored as a leaf, less the rows
+    stored already. A metric a.b after a.b.c adds a leaf row next to the
+    stored prefix row."""
+    rows: dict[str, bool] = {}
+    for raw in paths:
+        parts = raw.rstrip("%").split(".")
+        if stored_leaf.get(raw) or parts == [""]:
+            continue
+        for d in range(1, len(parts) + 1):
+            p = ".".join(parts[:d])
+            rows[p] = rows.get(p, False) or d == len(parts)
+    return sorted(
+        (p, p.count(".") + 1, "", lf)
+        for p, lf in rows.items()
+        if p not in stored_leaf or (lf and not stored_leaf[p])
     )
 
-    paths = metrics.select("path").distinct()
-    update_index_incremental(spark, paths.filter(~is_tagged_expr("path")), index_dir)
-    tagged = paths.filter(is_tagged_expr("path"))
-    if not tagged.isEmpty():
-        update_tag_index_incremental(spark, tagged, tag_index_dir)
+
+def publish_part(index_dir: str, table: pa.Table) -> tuple:
+    """Append `table` to `index_dir` as one parquet part, written under a
+    dot name (Spark and _parquet_listing skip it) and renamed into place.
+    Returns the part's listing entry."""
+    os.makedirs(index_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    final = os.path.join(index_dir, name)
+    pq.write_table(table, os.path.join(index_dir, f".{name}"))
+    os.rename(os.path.join(index_dir, f".{name}"), final)
+    st = os.stat(final)
+    return (name, st.st_size, st.st_mtime_ns)
+
+
+def update_index_incremental(index_dir: str, paths) -> None:
+    """A18 incremental maintenance, on the driver like the reference's
+    new-path lookup (metricstore.go:67-74 -> indexmanager.go:225-278): the
+    new rows as one parquet part, none if there are none. The driver copy
+    is extended, not re-read; another writer's part breaks its listing."""
+    idx = load_index(index_dir)
+    rows = new_index_rows(paths, idx.leaf)
+    if not rows:
+        return
+    entry = publish_part(index_dir, pa.table(list(zip(*rows)), schema=INDEX_SCHEMA))
+    by_depth = dict(idx.by_depth)
+    for d in {r[1] for r in rows}:
+        new = [r for r in rows if r[1] == d]
+        seen = {r[0] for r in new}
+        by_depth[d] = tuple(sorted([r for r in by_depth.get(d, ()) if r[0] not in seen] + new))
+    leaf = {**idx.leaf, **{r[0]: r[3] for r in rows}}
+    _COPIES[index_dir] = PathIndex(tuple(sorted((*idx.listing, entry))), by_depth, leaf)
+
+
+def update_indexes(spark, paths, index_dir: str, tag_index_dir: str) -> None:
+    """New paths among `paths` into both indexes: dot paths into the path
+    index, tagged series (`;tag=v`) into the tag index, never the dot tree
+    (operators/tags.py)."""
+    from cassabon_spark.operators.tags import update_tag_index_incremental
+
+    paths = set(paths)
+    tagged = {p for p in paths if ";" in p}
+    update_index_incremental(index_dir, paths - tagged)
+    update_tag_index_incremental(spark, tagged, tag_index_dir)
+
+
+def index_hook(spark, table, index_dir: str, tag_index_dir: str):
+    """SnapshotTable.append's `before_commit` for both ingest writers: the
+    paths of the staged store files, read with pyarrow, into both indexes."""
+
+    def hook(entries: list[dict]) -> None:
+        paths: set[str] = set()
+        for batch in table.scan_arrow(entries, ["path"]):
+            paths.update(pc.unique(batch.column(0)).to_pylist())
+        update_indexes(spark, paths, index_dir, tag_index_dir)
+
+    return hook

@@ -25,10 +25,16 @@ The metric base name is tag 'name' (graphite's convention).
 
 from __future__ import annotations
 
+import os
 import re
+from itertools import chain
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from cassabon_spark.operators.index import _parquet_listing, publish_part
 
 
 class TagExprError(ValueError):
@@ -123,22 +129,32 @@ def series_by_tag(index: DataFrame, *exprs: str) -> DataFrame:
     return out
 
 
-def update_tag_index_incremental(
-    spark, metrics: DataFrame, tag_index_dir: str, path_col: str = "path"
-) -> None:
-    """Append (series, tag, value) rows for NEWLY seen tagged series only
-    (anti-join on series against the stored index) — the tag twin of
-    operators.index.update_index_incremental."""
-    import os
+#: tag index directory -> (parquet listing, the series stored in it);
+#: process-wide and checked against the listing, like index._COPIES
+_SERIES: dict[str, tuple[tuple, frozenset]] = {}
 
-    new = build_tag_index(metrics, path_col=path_col)
-    has = os.path.isdir(tag_index_dir) and any(os.scandir(tag_index_dir))
-    if has:
-        existing = spark.read.parquet(tag_index_dir).select("series").distinct()
-        new = new.join(existing, "series", "left_anti")
-        if new.isEmpty():
-            return  # same as the path index: no empty parquet parts
-    new.write.mode("append").parquet(tag_index_dir)
+
+def update_tag_index_incremental(spark, series, tag_index_dir: str) -> None:
+    """The tag twin of operators.index.update_index_incremental: only the
+    `series` not stored yet (kept per listing, as load_index does) go
+    through build_tag_index, over an Arrow-backed frame: one Spark job."""
+    listing = _parquet_listing(tag_index_dir)
+    if _SERIES.get(tag_index_dir, (None,))[0] != listing:
+        stored = chain.from_iterable(
+            pq.read_table(os.path.join(tag_index_dir, name), columns=["series"])
+            .column(0)
+            .unique()
+            .to_pylist()
+            for name, _, _ in listing
+        )
+        _SERIES[tag_index_dir] = (listing, frozenset(stored))
+    known = _SERIES[tag_index_dir][1]
+    new = sorted(set(series) - known)
+    if not new:
+        return
+    frame = spark.createDataFrame(pa.table({"series": new}))
+    entry = publish_part(tag_index_dir, build_tag_index(frame, "series").toArrow())
+    _SERIES[tag_index_dir] = (tuple(sorted((*listing, entry))), known | set(new))
 
 
 def purge_tag_index_series(
@@ -168,7 +184,6 @@ def purge_tag_index_where(spark, tag_index_dir: str, dead: DataFrame) -> int:
     rewrite is the honest cost — same strategy as the dot-index delete
     (Engine.delete_paths). Returns the number of distinct series removed.
     """
-    import os
     import shutil
     from pathlib import Path
 

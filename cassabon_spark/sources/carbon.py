@@ -33,8 +33,8 @@ def parse_carbon_lines(lines: DataFrame, line_col: str = "line", observe: bool =
     (CarbonMetric.Timestamp float64, config/globals.go:13-17); callers needing
     a TIMESTAMP column use `F.timestamp_seconds`.
 
-    Returns (df, observation|None); observation["malformed"] is the dropped
-    count when observe=True.
+    Returns (df, observation|None); with observe=True, observation["ok"] and
+    observation["malformed"] count the kept and the dropped lines.
     """
     raw = lines.select(F.col(line_col).alias("line"))
     parts = F.split(F.trim(F.col("line")), r"\s+")
@@ -58,12 +58,9 @@ def parse_carbon_lines(lines: DataFrame, line_col: str = "line", observe: bool =
         parsed = parsed.observe(
             obs,
             F.count(F.lit(1)).alias("total"),
+            F.count_if(ok).alias("ok"),
             F.count_if(~ok).alias("malformed"),
         )
     metrics = parsed.filter(ok).select("path", "value", "ts")
     return metrics, obs
 
-
-def with_event_time(metrics: DataFrame) -> DataFrame:
-    """Add a proper TIMESTAMP column for windowing."""
-    return metrics.withColumn("event_time", F.timestamp_seconds(F.col("ts")))

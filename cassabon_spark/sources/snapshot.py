@@ -460,9 +460,6 @@ class SnapshotTable:
 
     # ------------------------------------------------------------ read path
 
-    def _abs(self, rel: str) -> str:
-        return f"{self.root}/{rel}"
-
     def _abs_entry(self, f: dict) -> str:
         """Absolute path of a manifest entry: entries written by THIS table
         resolve under self.root; entries adopted by a shallow clone carry
@@ -605,6 +602,7 @@ class SnapshotTable:
         partition_cols: tuple[str, ...] = (),
         max_retries: int = 5,
         txn: tuple[str, int] | None = None,
+        before_commit: Callable[[list[dict]], None] | None = None,
     ) -> int:
         """Atomic multi-partition append. Data files land first (invisible),
         then one manifest commit flips them live. Losing a commit race is
@@ -622,7 +620,11 @@ class SnapshotTable:
         `app_id`, the call is a NO-OP returning the current head — a
         retried streaming microbatch can never double-append. The
         committed (app_id -> version) map rides every manifest (carried
-        forward like constraints), so the check is one head read."""
+        forward like constraints), so the check is one head read.
+
+        `before_commit(entries)` runs once on the staged, still invisible
+        files, never for a txn already committed. Ingest indexes its paths
+        there, so a path may be listed a few hundred ms before it lands."""
         if txn is not None:
             head0 = self.version()
             if (
@@ -633,6 +635,8 @@ class SnapshotTable:
                 return head0  # already committed: skip staging entirely
         validated: dict = {}
         new = self._stage(df, partition_cols)
+        if before_commit is not None:
+            before_commit(new)
         for _ in range(max_retries):
             head = self.version()
             snap = self.snapshot(head)

@@ -10,10 +10,11 @@ Spark-first design:
     -> route (A5, when-chain)
     -> PER-MICROBATCH partial aggregation (rollup_finest on the batch)
     -> one txn-keyed append of the partial tier rows to the snapshot store (A9)
-    -> new paths from the same rolled-up rows into the path/tag indexes
+    -> before the commit, first-seen paths of the staged files into the
+       path/tag indexes, on the driver
 
-The microbatch's source is read once: with the index on, the rolled-up rows
-are materialised once and every consumer reads them.
+The store write is the rollup's only consumer, so each microbatch reads
+its source once and runs only the write's Spark jobs.
 
 Key design decision — STATELESS partial aggregation + merge-at-read:
 the reference accepts arbitrarily late data by merging rows at read time
@@ -45,13 +46,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassabon_spark.config import RollupConfig
+from cassabon_spark.operators.index import index_hook
 from cassabon_spark.operators.rollup import (
     PARTITION_COLS,
     rollup_finest,
     route,
     with_date_bucket,
 )
-from cassabon_spark.session import release_checkpoint
 from cassabon_spark.sources.carbon import parse_carbon_lines
 from cassabon_spark.sources.snapshot import SnapshotTable
 
@@ -64,55 +65,35 @@ def _write_batch(
     index_dir: str | None = None,
     stream_id: str | None = None,
 ):
-    """One microbatch: parse -> route -> rollup_finest, then feed the store
-    append and (with `index_dir`) the path and tag indexes from the rolled-up
-    rows. `stream_id` keys the append as (stream_id, batch_id), so a batch
-    replayed after a crash commits nothing twice."""
+    """One microbatch: parse -> route -> rollup_finest -> one append, keyed
+    (stream_id, batch_id) so a replayed batch commits nothing twice. The
+    append is the rollup's one consumer, so the batch runs only the store
+    write's Spark jobs. With `index_dir`, the append's before_commit hook
+    (index_hook) feeds both indexes on the driver from the staged files."""
+    spark = batch_df.sparkSession
     metrics, _ = parse_carbon_lines(batch_df, line_col="value")
     finest = rollup_finest(route(metrics, config), config)
     if finest is None:
         return
-    # With the index on, three consumers read the batch; materialise the
-    # rollup once so the source is scanned once, not once per consumer.
-    # Every parsed path reaches `finest` (rollup_finest groups by path and
-    # drops nothing), so the indexes lose nothing by reading it.
-    # localCheckpoint, not persist: a cached plan keeps all shuffle
-    # partitions (canChangeCachedPlanOutputPartitioning is off), so each
-    # batch would stage one store file per shuffle partition; the
-    # checkpoint keeps AQE's coalesced partitioning.
-    shared = index_dir is not None
-    if shared:
-        finest = finest.localCheckpoint()
-    try:
-        # one atomic manifest commit per microbatch: readers never see a
-        # half-written batch, and a crash before commit leaves only orphan
-        # files for vacuum (sources/snapshot.py)
-        table = SnapshotTable(batch_df.sparkSession, out_dir)
-        table.append(
-            with_date_bucket(finest),
-            partition_cols=PARTITION_COLS,
-            txn=None if stream_id is None else (stream_id, int(batch_id)),
-        )
-        # threshold-triggered auto-compaction: partitions accumulating many
-        # small partial files merge back to one row per (path, window),
-        # z-ordered by (path, time) so manifest stats pruning bites on both
-        # read dims; manifests beyond the retain window are pruned so head
-        # resolution and file listings stay O(1) in commit count. No-op
-        # cost: one manifest read per batch.
-        table.auto_compact(
-            compact_snapshot_partition_zorder, partition_cols=PARTITION_COLS
-        )
-        if shared:
-            # reference step 8 (SURVEY §3.1): new paths ride the same batch
-            # into the index, anti-joined so only first sightings expand
-            from cassabon_spark.operators.index import update_indexes
-
-            update_indexes(
-                batch_df.sparkSession, finest, index_dir, f"{index_dir}_tags"
-            )
-    finally:
-        if shared:
-            release_checkpoint(finest)
+    # one atomic manifest commit per microbatch: readers never see a
+    # half-written batch, and a crash before commit leaves only orphan
+    # files for vacuum (sources/snapshot.py)
+    table = SnapshotTable(spark, out_dir)
+    table.append(
+        with_date_bucket(finest),
+        partition_cols=PARTITION_COLS,
+        txn=None if stream_id is None else (stream_id, int(batch_id)),
+        before_commit=None
+        if index_dir is None
+        else index_hook(spark, table, index_dir, f"{index_dir}_tags"),
+    )
+    # threshold-triggered auto-compaction: partitions accumulating many
+    # small partial files merge back to one row per (path, window),
+    # z-ordered by (path, time) so manifest stats pruning bites on both
+    # read dims; manifests beyond the retain window are pruned so head
+    # resolution and file listings stay O(1) in commit count. No-op
+    # cost: one manifest read per batch.
+    table.auto_compact(compact_snapshot_partition_zorder, partition_cols=PARTITION_COLS)
 
 
 def _stream_id(checkpoint_dir: str | None) -> str | None:

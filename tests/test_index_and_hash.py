@@ -2,16 +2,20 @@
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
 from cassabon_spark.config import RollupConfig
 from cassabon_spark.engine import Engine
 from cassabon_spark.functions.pearson import pearson_hash8, pearson_hash64, peer_index
+from cassabon_spark.operators import index
 from cassabon_spark.operators.index import (
+    _parquet_listing,
     delete_paths,
     expand_ancestors,
     glob_to_regex,
+    load_index,
     search_glob,
     update_index_incremental,
 )
@@ -131,9 +135,7 @@ _PARITY_PATHS = ["a.web.err", "a.api.err", "a.1", "a.2", "a+b.c", "web.x", "api.
 @pytest.fixture(scope="module")
 def parity_engine(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("parity")
-    update_index_incremental(
-        spark, spark.createDataFrame([(p,) for p in _PARITY_PATHS], "path string"), str(d / "idx")
-    )
+    update_index_incremental(str(d / "idx"), _PARITY_PATHS)
     return Engine(spark, _CFG, str(d / "store"), str(d / "idx"))
 
 
@@ -155,10 +157,69 @@ def test_driver_index_sees_appends_and_deletes(spark, tmp_path):
     eng = Engine(spark, _CFG, str(tmp_path / "store"), str(tmp_path / "idx"))
     assert eng.get_paths("x.*") == []
     for p in ("x.a", "x.b"):
-        update_index_incremental(
-            spark, spark.createDataFrame([(p,)], "path string"), eng.index_dir
-        )
+        update_index_incremental(eng.index_dir, [p])
         # each append is visible on the very next lookup
         assert [r["path"] for r in eng.get_paths("x.*")][-1] == p
     assert eng.delete_paths("x.a") == 1
     assert [r["path"] for r in eng.get_paths("x.*")] == ["x.b"]
+
+
+def _spark_index_rows(spark, paths, stored):
+    """The Spark maintenance the driver expansion replaced: expand_ancestors
+    of the batch paths not stored as a leaf, anti-joined against the stored
+    rows (a stored leaf, or any stored row when the new row is a prefix)."""
+    batch = spark.createDataFrame([(p,) for p in paths], "path string").distinct()
+    if not stored:
+        rows = expand_ancestors(batch)
+    else:
+        existing = spark.createDataFrame(
+            stored, "path string, depth int, tenant string, leaf boolean"
+        )
+        batch = batch.join(existing.filter("leaf").select("path"), "path", "left_anti")
+        st = existing.select(F.col("path").alias("_p"), F.col("leaf").alias("_leaf"))
+        rows = expand_ancestors(batch).join(
+            st, (F.col("path") == F.col("_p")) & (F.col("_leaf") | ~F.col("leaf")), "left_anti"
+        )
+    return sorted((r["path"], r["depth"], r["leaf"]) for r in rows.collect())
+
+
+@pytest.mark.parametrize(
+    "batches",
+    [
+        [["a.b%", "a.c%%", "x%", "%"]],
+        [["a.b.c"], ["a.b"]],  # prefix, then the prefix as a metric
+        [["a.b"], ["a.b.c"]],  # a metric, then a path under it
+        [["a+b.c", "ä.ö.ü", "日本.語", "a..b"]],
+        [["solo"], ["solo", "other"]],
+        [["a.b", "a.c", "a.b.d"], ["a.b", "a.c", "a.b.d"]],  # a repeated batch
+    ],
+)
+def test_driver_expansion_matches_spark_anti_join(spark, tmp_path, batches):
+    """update_index_incremental appends, batch by batch, exactly the rows
+    the Spark anti-join maintenance appended; the driver copy is then the
+    max(leaf) merge of them."""
+    d = str(tmp_path / "idx")
+    stored: list[tuple] = []
+    for paths in batches:
+        want = _spark_index_rows(spark, paths, stored)
+        before = set(_parquet_listing(d))
+        update_index_incremental(d, paths)
+        added = [e[0] for e in _parquet_listing(d) if e not in before]
+        got = sorted(
+            (r["path"], r["depth"], r["leaf"])
+            for name in added
+            for r in pq.read_table(f"{d}/{name}").to_pylist()
+        )
+        assert got == want
+        assert len(added) == (1 if want else 0)
+        stored += [(p, dp, "", lf) for p, dp, lf in want]
+    merged: dict = {}
+    for p, dp, _, lf in stored:
+        merged[(p, dp)] = merged.get((p, dp), False) or lf
+    copy = load_index(d)
+    assert sorted((p, dp, lf) for rows in copy.by_depth.values() for p, dp, _, lf in rows) == sorted(
+        (p, dp, lf) for (p, dp), lf in merged.items()
+    )
+    # the copy the writer extended equals a fresh read of the directory
+    index._COPIES.pop(d)
+    assert load_index(d) == copy

@@ -1,14 +1,17 @@
-"""Ingest write path: one source pass per streaming microbatch (the store and
-both indexes read one materialised rollup), no empty index appends,
-txn-keyed snapshot appends per (query id, batch id), and one index lookup
-per render glob."""
+"""Ingest write path: one source pass and only the store write's Spark jobs
+per streaming microbatch (both indexes are fed on the driver from the
+staged store files), no empty index appends, txn-keyed snapshot appends per
+(query id, batch id) that survive a crash after indexing, and one index
+lookup per render glob."""
 
 from __future__ import annotations
 
+import uuid
 from collections import Counter
 from pathlib import Path
 
 import pyspark.sql.functions as F
+import pytest
 
 from cassabon_spark.config import RollupConfig
 from cassabon_spark.engine import Engine
@@ -73,12 +76,99 @@ def test_replayed_batch_commits_once(spark, tmp_path):
     def total_cnt():
         return SnapshotTable(spark, out).read().agg(F.sum("cnt")).first()[0]
 
-    for _ in range(2):
-        _write_batch(df, 0, CFG, out, idx, stream_id="q1")
+    _write_batch(df, 0, CFG, out, idx, stream_id="q1")
+    indexed = (_files(Path(idx)), _files(Path(f"{idx}_tags")))
+    assert indexed == (1, 1)
+    _write_batch(df, 0, CFG, out, idx, stream_id="q1")
     assert total_cnt() == len(lines)
+    # the replay commits nothing, so it writes no index or tag-index part
+    assert (_files(Path(idx)), _files(Path(f"{idx}_tags"))) == indexed
     # a recreated checkpoint has a new query id: its batch 0 is not a replay
     _write_batch(df, 0, CFG, out, stream_id="q2")
     assert total_cnt() == 2 * len(lines)
+
+
+def test_crash_after_index_hook_replays_once(spark, tmp_path, monkeypatch):
+    """The commit raises once after the before_commit hook has indexed the
+    staged paths; the replayed batch commits the lines once and the index
+    lists every committed path."""
+    lines = _batch_lines(0)
+    src = tmp_path / "lines.txt"
+    src.write_text("\n".join(lines) + "\n")
+    df = spark.read.text(str(src))
+    eng = Engine(spark, CFG, str(tmp_path / "store"), str(tmp_path / "idx"))
+    commit = SnapshotTable._commit
+    crashes = []
+
+    def crash_once(self, parent, payload):
+        if not crashes:
+            crashes.append(payload["op"])
+            raise OSError("injected crash before the manifest commit")
+        return commit(self, parent, payload)
+
+    monkeypatch.setattr(SnapshotTable, "_commit", crash_once)
+    with pytest.raises(OSError, match="injected"):
+        _write_batch(df, 0, CFG, eng.store_dir, eng.index_dir, stream_id="q")
+    assert crashes == ["append"]
+    assert eng.table.version() is None  # nothing committed
+    assert len(eng.get_paths("svc.*.*")) == 12  # but the hook ran
+    _write_batch(df, 0, CFG, eng.store_dir, eng.index_dir, stream_id="q")
+    _write_batch(df, 0, CFG, eng.store_dir, eng.index_dir, stream_id="q")
+    assert eng.store.agg(F.sum("cnt")).first()[0] == len(lines)
+    committed = {r["path"] for r in eng.store.select("path").distinct().collect()}
+    dot = {p for p in committed if ";" not in p}
+    assert {r["path"] for r in eng.get_paths("svc.*.*")} == dot
+    assert all(r["leaf"] for r in eng.get_paths("svc.*.*"))
+    assert eng.get_tagged_series("dc=x") == sorted(committed - dot)
+
+
+def _jobs(spark, fn):
+    """fn() under a fresh job group -> the number of jobs it started, less
+    those of any _jobs call nested in it; the outer group is restored."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    group = f"ingest-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        if outer is None:
+            sc._jsc.clearJobGroup()
+        else:
+            sc.setJobGroup(outer, outer)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stream_batch_runs_only_the_store_write_jobs(spark, tmp_path, monkeypatch):
+    """A microbatch of known dot paths runs the store write's jobs only
+    (at most 2) and none for the indexes; a batch that carries a new
+    tagged series runs at most one more, for the tag index."""
+    from cassabon_spark.operators import index
+
+    index_jobs = []
+    update = index.update_indexes
+
+    def counted(*args):
+        index_jobs.append(_jobs(spark, lambda: update(*args)))
+
+    monkeypatch.setattr(index, "update_indexes", counted)
+    out, idx = str(tmp_path / "store"), str(tmp_path / "idx")
+
+    def batch(k, lines):
+        src = tmp_path / f"b{k}.txt"
+        src.write_text("\n".join(lines) + "\n")
+        df = spark.read.text(str(src))
+        return _jobs(spark, lambda: _write_batch(df, k, CFG, out, idx, stream_id="q"))
+
+    dot = [x for x in _batch_lines(0) if ";" not in x]
+    batch(0, dot)  # first sightings: one index part, no Spark job
+    assert index_jobs == [0]
+    assert batch(1, [x.replace(" 1000", " 1001") for x in dot]) + index_jobs[-1] <= 2
+    assert index_jobs[-1] == 0
+    assert batch(2, dot + ["svc.tagged;dc=y 1.0 1002"]) <= 2
+    assert index_jobs[-1] <= 1
+    assert len(index.load_index(idx).leaf) == 12 + 4 + 1
+    assert _files(Path(idx)) == 1
 
 
 def test_reingest_known_paths_adds_no_index_file(spark, tmp_path):
